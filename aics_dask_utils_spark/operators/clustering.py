@@ -148,15 +148,18 @@ def _scored_struct_array(
     )
 
 
-#: Memoized spread decisions, keyed on (session id, semantic plan
-#: hash): ``df.rdd`` forces physical planning (~50 ms per fresh
+#: Memoized spread decisions, keyed on (Spark application id, semantic
+#: plan hash): ``df.rdd`` forces physical planning (~50 ms per fresh
 #: DataFrame, 2-3 calls per hybrid plan construction — r12 ADVICE), so
 #: the partition count of a semantically identical plan is computed
-#: once per session. The cached value is a PERFORMANCE hint only —
+#: once per application. The application id, unlike ``id(session)``,
+#: is never reused after a session restart, so a recycled object id
+#: cannot return another application's count. The cached value is a
+#: PERFORMANCE hint only —
 #: results never depend on partitioning — so a stale entry (files
 #: changed under the same plan) can cost a repartition, never a wrong
 #: row. Bounded: cleared wholesale if it ever grows past 256 plans.
-_SPREAD_CACHE: dict[tuple[int, int], int] = {}
+_SPREAD_CACHE: dict[tuple[str, int], int] = {}
 
 
 def spread_to_cores(df: DataFrame) -> DataFrame:
@@ -170,7 +173,7 @@ def spread_to_cores(df: DataFrame) -> DataFrame:
     100 TB design point; results never depend on partitioning."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
-    key = (id(df.sparkSession), df.semanticHash())
+    key = (sc.applicationId, df.semanticHash())
     got = _SPREAD_CACHE.get(key)
     if got is None:
         if len(_SPREAD_CACHE) > 256:

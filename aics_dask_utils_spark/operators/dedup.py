@@ -404,72 +404,53 @@ def embedding_near_dup_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "d1",
-    dst: str = "d2",
-    max_iter: int = 25,
-    reliable: bool = False,
-) -> DataFrame:
-    """Connected components over an undirected pair list by iterative
-    min-label propagation: every node repeatedly adopts the smallest
-    label among itself and its neighbors until fixpoint. Returns
-    (doc_id, component) where component = min doc_id of the component.
+#: Small-graph gate for :func:`connected_components_star`: a canonical
+#: edge set of at most this many edges is collected and union-found on
+#: the driver instead of running star rounds (each round is a
+#: checkpoint plus a signature action; the collect is one job over
+#: the already-materialized edges). Measured at the bound on local[4]
+#: (100k random edges over 200k ids): collect 0.52 s, union-find plus
+#: the returned frame 0.45 s, against 8.7 s for the star loop on the
+#: same graph; the result (<= 200k rows, ~4.8 MB) stays under the
+#: default broadcast threshold. Above it the distributed loop runs
+#: unchanged; 0 disables the fast path. Re-measure before raising it.
+LOCAL_CC_MAX = 100_000
 
-    This is the step LSH pair-finding needs to become an actual dedup
-    GROUPING (A~B, B~C => {A,B,C} keep one). Iterative => no single SQL
-    equivalent; each round is one shuffle join + one aggregate, and the
-    label frame is checkpointed to keep lineage flat
-    (``reliable=True`` → fault-tolerant ``checkpoint()`` against the
-    configured checkpoint dir, the cluster-safe choice for long jobs —
-    see :mod:`.checkpointing`). Convergence takes
-    at most the graph diameter rounds — near-dup clusters are shallow
-    (diameter << 10), so the loop is short regardless of corpus size.
-    At 100 TB scale swap in the large-star/small-star variant
-    (Kiveris et al.) to bound degree hot-spots; the loop skeleton is
-    identical."""
-    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+
+def _components_local(e: DataFrame, rows) -> DataFrame:
+    """(doc_id, component) for every endpoint of the collected canonical
+    edges, by union-find on the driver. Union-by-min keeps every root
+    the minimum of its set, so the root IS the component id the star
+    loop converges to. Returned as a pandas-built (Arrow) local relation:
+    it carries a real size estimate, so the joins after it broadcast."""
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in rows:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    nodes = list(parent)
+    comp = pd.DataFrame({"doc_id": nodes, "component": [find(x) for x in nodes]})
+    u = e.schema["u"]
+    return e.sparkSession.createDataFrame(
+        comp,
+        schema=StructType(
+            [StructField(c, u.dataType, u.nullable) for c in ("doc_id", "component")]
+        ),
     )
-    und = iter_checkpoint(und, reliable=reliable)
-    labels = (
-        und.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node"))
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            labels.join(und, labels["node"] == und["a"])
-            .groupBy(F.col("b").alias("node"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
-            )
-        )
-        new_labels = iter_checkpoint(new_labels, reliable=reliable)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # One hop per round: a diameter > max_iter graph would silently
-        # return labels that are only LOCAL minima. Fail loudly; deep
-        # graphs belong to connected_components_star (O(log n) rounds).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_star"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component"))
 
 
 def connected_components_star(
@@ -481,10 +462,13 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): the 100 TB-scale variant of :func:`connected_components`.
+    SoCC'14). Returns (doc_id, component) where component = the min
+    doc_id of the component, for every endpoint of the pair list — the
+    step LSH pair-finding needs to become an actual dedup GROUPING
+    (A~B, B~C => {A,B,C} keep one).
 
-    Min-label propagation moves one hop per round, so its round count is
-    the graph DIAMETER and a high-degree hub re-sends its whole
+    Min-label propagation would move one hop per round, so its round
+    count is the graph DIAMETER and a high-degree hub re-sends its whole
     neighborhood every round. The star operations instead rewire the
     edge set itself toward the component minimum:
 
@@ -496,9 +480,10 @@ def connected_components_star(
     Each round is two groupBy-min shuffles over the CURRENT edge set,
     which only shrinks; no per-round label join against all nodes.
     Converged state is a forest of stars: every node's single neighbor
-    is its component min. Same contract as connected_components:
-    returns (doc_id, component = min id), oracle-verifiable against a
-    recursive-CTE reachability query. ``reliable=True`` swaps the
+    is its component min, oracle-verifiable against a recursive-CTE
+    reachability query. Graphs of at most ``LOCAL_CC_MAX`` canonical
+    edges skip the rounds: the edges are collected once and union-found
+    on the driver (identical labelling). ``reliable=True`` swaps the
     per-round ``localCheckpoint`` for a fault-tolerant ``checkpoint()``
     (see :mod:`.checkpointing`) — the right default for long CC jobs on
     a real cluster, where an executor loss would otherwise kill the
@@ -512,6 +497,10 @@ def connected_components_star(
         orig.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")).distinct(),
         reliable=reliable,
     )
+    if LOCAL_CC_MAX > 0:
+        rows = e.limit(LOCAL_CC_MAX + 1).collect()
+        if len(rows) <= LOCAL_CC_MAX:
+            return _components_local(e, rows)
     # Node set = endpoints of the CHECKPOINTED canonical edges (u≠v and
     # canonicalization preserve endpoints, so this is exactly the raw
     # pair list's endpoint set). Deriving it from ``e`` instead of
@@ -700,7 +689,7 @@ def semdedup(
         .where(vec_dot("u1", "u2") >= threshold)
         .select("v1", "v2")
     )
-    comp = connected_components(pairs, "v1", "v2")
+    comp = connected_components_star(pairs, "v1", "v2")
     member = comp.join(
         with_sim, comp["doc_id"] == with_sim["vid"]
     ).select("vid", "cid", "component", "cent_sim")

@@ -1,7 +1,7 @@
 """Graph-analytics operators beyond pair dedup: weighted PageRank.
 
-Complements :func:`..operators.dedup.connected_components` (the other
-iterative graph op). Same scale skeleton: the edge list is the only
+Complements :func:`..operators.dedup.connected_components_star` (the
+other iterative graph op). Same scale skeleton: the edge list is the only
 big relation; each iteration is one shuffle join (edges x ranks on
 src) + one aggregation (contributions by dst); the rank relation is
 node-sized. Edges are checkpointed once so the (usually expensive)

@@ -219,6 +219,22 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.simhash(docs, bits=16)
 
 
+def _reach_ctes(a: str = "d1", b: str = "d2") -> str:
+    """``und(a, b)``, the symmetric closure of ``pairs(a, b)``, and
+    ``reach(a, b)``, its transitive closure: the recursive-CTE oracle of
+    connected components (component = ``LEAST(a, MIN(b))`` per ``a``)."""
+    return f"""und AS (
+      SELECT {a} AS a, {b} AS b FROM pairs
+      UNION
+      SELECT {b} AS a, {a} AS b FROM pairs
+    ),
+    reach AS (
+      SELECT a, b FROM und
+      UNION
+      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
+    )"""
+
+
 # Unit-normalized embedding CTE — mirrors with_unit_vector(): norm is a
 # fold over the double-cast array, each element divided by it.
 _UNIT_CTE = """
@@ -309,21 +325,13 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_components",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    )
+    {_reach_ctes()}
     SELECT a AS doc_id, LEAST(a, MIN(b)) AS component
     FROM reach GROUP BY a
     """,
     doc="near-dup GROUPS: connected components over the verified MinHash-"
-    "LSH pair graph via iterative min-label propagation — the step that "
+    "LSH pair graph via connected_components_star (driver-side "
+    "union-find below its LOCAL_CC_MAX edge gate) — the step that "
     "turns pairs (A~B, B~C) into dedup clusters {{A,B,C}} (E30,E31). "
     "Iterative Spark loop vs a recursive-CTE oracle: the driver "
     "hash-checks a whole iterative graph algorithm",
@@ -332,29 +340,20 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(docs, num_hashes=12, bands=4, threshold=0.8)
-    return D.connected_components(pairs, "d1", "d2")
+    return D.connected_components_star(pairs, "d1", "d2")
 
 
 @register(
     "dedup_components_star",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    )
+    {_reach_ctes()}
     SELECT a AS doc_id, LEAST(a, MIN(b)) AS component
     FROM reach GROUP BY a
     """,
     doc="connected components via alternating large-star/small-star "
     "(Kiveris et al. SoCC'14) over the same verified LSH pair graph — "
-    "the 100 TB variant of dedup_minhash_components: rounds scale with "
+    "the same composition as dedup_minhash_components: rounds scale with "
     "log(n), not graph diameter, and no high-degree hub re-ships its "
     "neighborhood every round; each round is two groupBy-min shuffles "
     "over a shrinking edge set (E30,E31)",
@@ -543,21 +542,12 @@ def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
       WHERE list_dot_product(a.u, b.u) >= 0.4
     ),
-    und AS (
-      SELECT v1 AS a, v2 AS b FROM pairs
-      UNION
-      SELECT v2 AS a, v1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    )
+    {_reach_ctes("v1", "v2")}
     SELECT a AS doc_id, LEAST(a, MIN(b)) AS component
     FROM reach GROUP BY a
     """,
     doc="embedding near-dup CLUSTERS: cosine pair graph (label-blocked) "
-    "-> connected components via iterative min-label propagation — the "
+    "-> connected components via connected_components_star — the "
     "semantic-dedup composition (pairs alone under-merge transitive "
     "groups). Iterative Spark loop vs recursive-CTE oracle "
     "(E19,E30,E31 composed)",
@@ -566,7 +556,7 @@ def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = D.embedding_near_dup_pairs(emb, threshold=0.4).select("v1", "v2")
-    return D.connected_components(pairs, "v1", "v2")
+    return D.connected_components_star(pairs, "v1", "v2")
 
 
 @register(
@@ -757,16 +747,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_leakage_safe_split",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a
@@ -793,7 +774,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "connected_components_star — the large-star/small-star variant, "
     "O(log n) rounds and no per-round hub-neighborhood re-broadcast, "
     "because near-dup graphs have boilerplate hubs at corpus scale; "
-    "components identical to min-label propagation by definition); "
+    "each component labelled by its min id); "
     "iterative Spark loop vs recursive-CTE oracle. One extra "
     "doc-keyed left join on top of the component cost; invariant "
     "pinned in tests/test_plan_quality.py",
@@ -812,9 +793,9 @@ def pipeline_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _component_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, unit) where unit = near-dup connected-component min id
     (singletons are their own unit) — the shared split-unit relation of
-    the leakage-safe split family. Uses the large-star/small-star CC
-    (the 100 TB-scale variant): same components as min-label
-    propagation, O(log n) rounds, degree hot-spots bounded."""
+    the leakage-safe split family. Uses the large-star/small-star CC:
+    O(log n) rounds, degree hot-spots bounded, and a driver-side
+    union-find for graphs under its edge gate."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(docs, num_hashes=12, bands=4, threshold=0.8)
     comp = D.connected_components_star(pairs, "d1", "d2")
@@ -831,16 +812,7 @@ def _component_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_leakage_safe_kfold",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a
@@ -924,16 +896,7 @@ def pipeline_semantic_decontaminate(
     "dedup_keep_best_quality",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a
@@ -991,16 +954,7 @@ _SW_Q = ",".join(f"'{w}'" for w in _T.QUALITY_STOPWORDS)
     "dedup_keep_best_scored",
     oracle=rf"""
     WITH RECURSIVE {{pair_ctes}},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a
@@ -1182,16 +1136,7 @@ _SRC_WEB_SQL = ",".join(f"'{s}'" for s in _SRC_WEB)
     "dedup_keep_best_source",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a
@@ -1272,16 +1217,7 @@ def dedup_keep_best_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_dedup_card",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a
@@ -1345,16 +1281,7 @@ def pipeline_dedup_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_retention_suite",
     oracle=rf"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a
@@ -1499,16 +1426,7 @@ def pipeline_retention_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_retention_materialize",
     oracle=f"""
     WITH RECURSIVE {_minhash_pair_ctes()},
-    und AS (
-      SELECT d1 AS a, d2 AS b FROM pairs
-      UNION
-      SELECT d2 AS a, d1 AS b FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
+    {_reach_ctes()},
     comp AS (
       SELECT a AS doc_id, LEAST(a, MIN(b)) AS unit
       FROM reach GROUP BY a

@@ -22,13 +22,9 @@ def test_dedup_ops_on_empty_corpus(spark):
 
 
 def test_connected_components_on_empty_edges(spark):
-    from aics_dask_utils_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from aics_dask_utils_spark.operators.dedup import connected_components_star
 
     edges = spark.createDataFrame([], "d1 bigint, d2 bigint")
-    assert connected_components(edges).count() == 0
     assert connected_components_star(edges).count() == 0
 
 

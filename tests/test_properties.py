@@ -224,38 +224,109 @@ def test_weighted_sample_excludes_zero_and_null_weights(spark):
     assert all(d >= 20 for d in picked), "zero/NULL-weight rows were selected"
 
 
-def test_star_components_agree_with_min_label(spark):
-    """large-star/small-star must produce the identical
-    (node, component-min) labelling as min-label propagation on
+def _reference_components(edges):
+    """Pure-Python connected components by BFS: {node: min node of its
+    component} over the non-NULL, non-self-loop edges — the contract of
+    connected_components_star, computed independently of union-find."""
+    adj = {}
+    for a, b in edges:
+        if a is None or b is None or a == b:
+            continue
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    comp = {}
+    for start in adj:
+        if start in comp:
+            continue
+        seen, todo = {start}, [start]
+        while todo:
+            for nb in adj[todo.pop()] - seen:
+                seen.add(nb)
+                todo.append(nb)
+        for node in seen:
+            comp[node] = min(seen)
+    return comp
+
+
+_CHAIN = [(i, i + 1) for i in range(100, 140)]          # diameter 40
+_HUB = [(500, x) for x in range(501, 560)]              # degree-59 star
+_TRI = [(7, 8), (8, 9), (9, 7)]                         # cycle
+
+
+def test_star_components_agree_with_python_reference(spark, monkeypatch):
+    """The distributed large-star/small-star loop (gate forced to 0) must
+    produce the (node, component-min) labelling of a pure-Python BFS on
     adversarial shapes: a long chain (worst case for propagation), a
     high-degree hub (worst case for star rewiring), self-contained
     triangles, and singleton-free disjoint pairs."""
-    from aics_dask_utils_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from aics_dask_utils_spark.operators import dedup as D
 
-    chain = [(i, i + 1) for i in range(100, 140)]          # diameter 40
-    hub = [(500, x) for x in range(501, 560)]              # degree-59 star
-    tri = [(7, 8), (8, 9), (9, 7)]                         # cycle
+    monkeypatch.setattr(D, "LOCAL_CC_MAX", 0)
     pairs = [(1000 + 2 * i, 1001 + 2 * i) for i in range(20)]
-    edges = spark.createDataFrame(
-        chain + hub + tri + pairs, "d1 bigint, d2 bigint"
-    )
-    a = {
+    raw = _CHAIN + _HUB + _TRI + pairs
+    edges = spark.createDataFrame(raw, "d1 bigint, d2 bigint")
+    got = {
         (r["doc_id"], r["component"])
-        for r in connected_components(edges, max_iter=50).collect()
+        for r in D.connected_components_star(edges).collect()
     }
-    b = {
-        (r["doc_id"], r["component"])
-        for r in connected_components_star(edges).collect()
-    }
-    assert a == b
+    assert got == set(_reference_components(raw).items())
     # spot-check the labelling itself, not just agreement
-    lab = dict(b)
+    lab = dict(got)
     assert all(lab[i] == 100 for i in range(100, 141))
     assert all(lab[x] == 500 for x in range(500, 560))
     assert lab[7] == lab[8] == lab[9] == 7
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+@pytest.mark.parametrize(
+    "raw",
+    [
+        _CHAIN + _HUB + _TRI,
+        # self-loops, duplicate and reversed edges, NULL endpoints
+        [(1, 1), (1, 2), (1, 2), (2, 1), (3, 2), (4, None), (None, 5),
+         (None, None), (6, 6), (7, 8), (8, 7)],
+        [],
+    ],
+    ids=["chain_hub_triangle", "degenerate_edges", "empty"],
+)
+def test_cc_star_gate_equivalence(spark, monkeypatch, raw, id_type):
+    """The driver-side union-find below LOCAL_CC_MAX and the distributed
+    star loop (gate 0) return identical (doc_id, component) sets, equal
+    to the pure-Python reference, under an identical output schema."""
+    from aics_dask_utils_spark.operators import dedup as D
+
+    edges = spark.createDataFrame(raw, f"d1 {id_type}, d2 {id_type}")
+    local = D.connected_components_star(edges)
+    monkeypatch.setattr(D, "LOCAL_CC_MAX", 0)
+    dist = D.connected_components_star(edges)
+    assert local.schema == dist.schema
+    assert local.schema["doc_id"].dataType.simpleString() == id_type
+    got_local = {(r["doc_id"], r["component"]) for r in local.collect()}
+    got_dist = {(r["doc_id"], r["component"]) for r in dist.collect()}
+    assert got_local == got_dist == set(_reference_components(raw).items())
+
+
+def test_cc_star_gate_boundary_and_non_nullable_ids(spark, monkeypatch):
+    """At exactly LOCAL_CC_MAX canonical edges the fast path is taken,
+    one edge above it the star loop runs; both label identically, and
+    non-nullable id columns keep their nullability on both paths."""
+    from aics_dask_utils_spark.operators import dedup as D
+
+    edges = spark.range(100, 140).select(
+        F.col("id").alias("d1"), (F.col("id") + 1).alias("d2")
+    )
+    want = set(_reference_components([(i, i + 1) for i in range(100, 140)]).items())
+    outs = []
+    for gate in (40, 39):
+        monkeypatch.setattr(D, "LOCAL_CC_MAX", gate)
+        out = D.connected_components_star(edges)
+        assert not out.schema["doc_id"].nullable
+        assert {(r["doc_id"], r["component"]) for r in out.collect()} == want
+        outs.append(out)
+    assert outs[0].schema == outs[1].schema
+    plan = outs[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert "LocalRelation" not in outs[1]._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_reliable_checkpoint_refuses_without_dir(spark):
@@ -291,10 +362,7 @@ def test_reliable_checkpoint_path_for_iterative_ops(tmp_path):
         """
         import sys
         from aics_dask_utils_spark.session import get_spark
-        from aics_dask_utils_spark.operators.dedup import (
-            connected_components,
-            connected_components_star,
-        )
+        from aics_dask_utils_spark.operators import dedup as D
         from aics_dask_utils_spark.operators.graph import label_propagation, pagerank
 
         spark = get_spark(master="local[4]", app_name="ckpt-equivalence",
@@ -305,15 +373,16 @@ def test_reliable_checkpoint_path_for_iterative_ops(tmp_path):
         tri = [(7, 8), (8, 9), (9, 7)]
         edges = spark.createDataFrame(chain + tri, "d1 bigint, d2 bigint")
 
-        base = {(r["doc_id"], r["component"])
-                for r in connected_components_star(edges).collect()}
-        rel_star = {(r["doc_id"], r["component"])
-                    for r in connected_components_star(edges, reliable=True).collect()}
-        rel_min = {(r["doc_id"], r["component"])
-                   for r in connected_components(edges, max_iter=30,
-                                                 reliable=True).collect()}
+        def cc(**kw):
+            return {(r["doc_id"], r["component"])
+                    for r in D.connected_components_star(edges, **kw).collect()}
+
+        base = cc()
+        rel_local = cc(reliable=True)
+        D.LOCAL_CC_MAX = 0  # the distributed star loop, checkpointing per round
+        rel_star = cc(reliable=True)
+        assert rel_local == base, (rel_local, base)
         assert rel_star == base, (rel_star, base)
-        assert rel_min == base, (rel_min, base)
 
         we = spark.createDataFrame(
             [(1, 2, 1.0), (2, 3, 2.0), (3, 1, 1.0)],
@@ -340,18 +409,18 @@ def test_reliable_checkpoint_path_for_iterative_ops(tmp_path):
     assert "CKPT-EQUIVALENCE-OK" in proc.stdout
 
 
-def test_min_label_components_raise_instead_of_silently_truncating(spark):
-    """Regression: min-label propagation moves one hop per round; on a
-    graph whose diameter exceeds max_iter it used to RETURN local-minima
-    labels as if converged. It must fail loudly instead."""
-    import pytest as _pytest
+def test_spread_cache_keyed_on_application_id(spark, monkeypatch):
+    """spread_to_cores memoizes partition counts per Spark application,
+    not per session object: a restarted session can reuse a stopped
+    one's id(), and must not read that application's counts."""
+    from aics_dask_utils_spark.operators import clustering as C
 
-    from aics_dask_utils_spark.operators.dedup import connected_components
-
-    chain = [(i, i + 1) for i in range(100, 140)]  # diameter 40
-    edges = spark.createDataFrame(chain, "d1 bigint, d2 bigint")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=10)
+    df = spark.range(37).coalesce(1)
+    # A count left by another application under the same plan hash.
+    monkeypatch.setitem(C._SPREAD_CACHE, ("stale-app", df.semanticHash()), 10**6)
+    n = spark.sparkContext.defaultParallelism
+    assert C.spread_to_cores(df).rdd.getNumPartitions() == n
+    assert C._SPREAD_CACHE[(spark.sparkContext.applicationId, df.semanticHash())] == 1
 
 
 def test_resample_grid_is_hourly_continuous(spark, sf_dir):
