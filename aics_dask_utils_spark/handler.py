@@ -146,25 +146,22 @@ class SparkHandler:
         func: Callable,
         *iterables: Sequence,
         batch_size: Optional[int] = None,
-        one_job: bool = True,
         **kwargs,
     ) -> list[Any]:
         """Elementwise map with bounded in-flight work.
 
-        ``batch_size=None`` (default): a single Spark job whose
-        partitioning bounds concurrent tasks — Spark's scheduler handles
-        millions of rows per job, so the reference's flood-avoidance
-        batching (``distributed_handler.py:99-109``) collapses to
-        partitioning. Pass an explicit ``batch_size`` (and it becomes a
-        sequence of per-slice jobs, each gathered to completion before
-        the next — the reference's exact semantics) only when you need
-        completed-per-batch checkpointing.
+        ``batch_size=None`` (default): ONE Spark job whose partitioning
+        bounds concurrent tasks — Spark's scheduler handles millions of
+        rows per job, so the reference's flood-avoidance batching
+        (``distributed_handler.py:99-109``) collapses to partitioning.
+        An explicit ``batch_size`` runs sequential per-slice jobs, each
+        gathered to completion before the next (the reference's exact
+        semantics) — use it only when you need completed-per-batch
+        checkpointing.
         """
         n = self._check_aligned(iterables)
-        if batch_size is None and one_job:
-            return self.gather(self.map(func, *iterables, **kwargs))
         if batch_size is None:
-            batch_size = self._get_batch_size()
+            return self.gather(self.map(func, *iterables, **kwargs))
         results: list[Any] = []
         for i in range(0, n, batch_size):
             sliced = [it[i : i + batch_size] for it in iterables]

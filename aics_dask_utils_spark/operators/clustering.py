@@ -13,9 +13,10 @@ hash-check (see ``plans/clustering.py``):
 
 Scale shape: assignment is a broadcast cross join (k centroids are KBs)
 + one narrow pass over the vectors; the update shuffles (k × dims)
-groups. Centroids never leave the cluster — the loop is lazy plans,
-no driver collect. At real scale you'd run this over an IVF sample;
-the loop skeleton is identical.
+groups. The loop is lazy plans; the trained k×d centroids come back to
+the driver once, as a plain ``[(cid, c)]`` list (KBs by contract), and
+every consumer ships them as a literal. At real scale you'd run this
+over an IVF sample; the loop skeleton is identical.
 """
 
 from __future__ import annotations
@@ -32,17 +33,23 @@ from ..functions.vectors import as_double_array, vec_dot
 #: same knob is documented as the FAISS ~1M-vector recipe, where the
 #: collect is GBs of Python objects and the local loop is ~10^10 ops.
 #: Above this row bound the bounded sample keeps training in the
-#: RETAINED distributed Lloyd loop instead (identical values — the
-#: local/distributed equivalence is pinned in tests/test_ann_recall.py).
-#: 4096 rows x 64 dims collects ~2 MB and local-trains in well under a
-#: second; scale the bound only with a measurement.
+#: RETAINED distributed Lloyd loop instead. Both trainers return the
+#: same values bit for bit, NaN/±Inf components included —
+#: ``test_trainer_gate_is_value_identical`` in tests/test_ann_recall.py
+#: pins it for k-means, PQ and IVFADC. 4096 rows x 64 dims collects
+#: ~2 MB and local-trains in well under a second; scale the bound only
+#: with a measurement.
 LOCAL_TRAIN_MAX = 4096
+
+#: A trained centroid set: ``[(cid, c)]``, k×d doubles (KBs).
+Centroids = list[tuple[int, list[float]]]
 
 
 def _centroid_candidates(cent: DataFrame) -> DataFrame:
-    """Collapse the (cid, c) centroid relation into ONE row holding the
-    candidate array [(cid, c, cc)] with cc = ⟨c,c⟩ precomputed — the
-    broadcast side of the expression-level argmin below."""
+    """Collapse the (cid, c) centroid relation of a running Lloyd loop
+    into ONE row holding the candidate array [(cid, c, cc)] with
+    cc = ⟨c,c⟩ precomputed — the loop's broadcast build side for
+    :func:`_assign`."""
     return cent.agg(
         F.collect_list(
             F.struct("cid", "c", vec_dot("c", "c").alias("cc"))
@@ -50,22 +57,47 @@ def _centroid_candidates(cent: DataFrame) -> DataFrame:
     )
 
 
-def _dot_local(a, b) -> float:
+def _dot_local(a, b) -> float | None:
     """Left-fold dot product — the same IEEE multiply-add order as
     :func:`..functions.vectors.vec_dot`'s aggregate fold, so a value
-    computed here is bit-identical to the engine's."""
+    computed here is bit-identical to the engine's. A NULL (``None``)
+    component makes the whole fold NULL, as it does in the engine."""
     acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
+    try:
+        for x, y in zip(a, b):
+            acc = acc + x * y
+    except TypeError:  # None * float
+        return None
     return acc
 
 
-def _local_candidate_expr(rows: list[tuple[int, list[float]]]):
-    """The [(cid, c, cc)] candidate array as ONE folded LITERAL, for
-    centroids that were trained driver-side (the bounded-sample
-    ``train_limit`` paths) — same struct schema
-    :func:`_centroid_candidates` broadcasts; ``cc`` is the local
-    left-fold dot (bit-identical doubles, see :func:`_dot_local`).
+def _nearest_local(v, cands) -> int | None:
+    """Driver-side argmin over ``cands`` = [(cid, c, cc)]: the cid the
+    engine's ``array_min`` over (dist2, cid) structs picks. dist² is
+    the same ⟨v,v⟩ − 2·⟨v,c⟩ + ⟨c,c⟩ left-fold arithmetic; the key is
+    the engine's struct ordering — NULL dist² first, NaN greatest
+    (NaN == NaN), ties by cid. (A bare (d2, cid) tuple gets both wrong:
+    every NaN comparison is False in Python.) ``None`` when there are
+    no candidates."""
+    vv = _dot_local(v, v)
+    best = None
+    for cid, c, cc in cands:
+        dot = _dot_local(v, c)
+        if vv is None or dot is None or cc is None:
+            key = (-1, 0.0, cid)
+        else:
+            d2 = vv - 2.0 * dot + cc
+            key = (1, 0.0, cid) if d2 != d2 else (0, d2, cid)
+        if best is None or key < best:
+            best = key
+    return None if best is None else best[2]
+
+
+def _local_candidate_expr(rows: Centroids):
+    """The [(cid, c, cc)] candidate array of trained centroids as ONE
+    folded LITERAL — same struct schema :func:`_centroid_candidates`
+    builds; ``cc`` is the local left-fold dot (bit-identical doubles,
+    see :func:`_dot_local`).
 
     Delivery is ``from_json`` on a literal STRING: ``from_json`` of a
     foldable input is foldable, so ConstantFolding collapses the whole
@@ -81,7 +113,7 @@ def _local_candidate_expr(rows: list[tuple[int, list[float]]]):
 
     payload = json.dumps(
         [
-            {"cid": int(cid), "c": [float(x) for x in c], "cc": _dot_local(c, c)}
+            {"cid": int(cid), "c": _json_doubles(c), "cc": _dot_local(c, c)}
             for cid, c in rows
         ]
     )
@@ -90,38 +122,46 @@ def _local_candidate_expr(rows: list[tuple[int, list[float]]]):
     )
 
 
-def _local_centroid_map(rows: list[tuple[int, list[float]]]):
-    """{cid -> c} as one folded literal MAP (driver-side-trained
-    centroids): consumers fetch a row's own centroid via ``element_at``
-    instead of a broadcast join against the (cid, c) relation — zero
-    jobs, same doubles. Same foldable from_json delivery as
-    :func:`_local_candidate_expr` (map_from_entries of a foldable
-    array is itself foldable)."""
+def _json_doubles(c: list) -> list:
+    """A centroid's components for the JSON literal: floats, with NULL
+    components kept as ``None`` (JSON null). ``json.dumps`` writes
+    NaN/±Inf as ``NaN``/``Infinity``/``-Infinity``, which ``from_json``
+    reads back (``allowNonNumericNumbers`` is on by default)."""
+    return [None if x is None else float(x) for x in c]
+
+
+def _own_centroid(rows: Centroids):
+    """Each row's own centroid ``c[cid]``, fetched with
+    ``element_at`` from a {cid -> c} folded literal MAP — zero jobs,
+    same doubles as a join against the centroids. Same foldable
+    from_json delivery as :func:`_local_candidate_expr`
+    (map_from_entries of a foldable array is itself foldable)."""
     import json
 
     payload = json.dumps(
-        [{"key": int(cid), "value": [float(x) for x in c]} for cid, c in rows]
+        [{"key": int(cid), "value": _json_doubles(c)} for cid, c in rows]
     )
-    return F.map_from_entries(
+    cmap = F.map_from_entries(
         F.from_json(
             F.lit(payload), "array<struct<key:bigint,value:array<double>>>"
         )
     )
+    return F.element_at(cmap, F.col("cid"))
 
 
-def _local_candidates_rel(spark, rows: list[tuple[int, list[float]]]):
+def _local_candidates_rel(spark, rows: Centroids):
     """ONE-ROW LocalRelation holding the literal candidate array — the
-    broadcast build side for driver-side-trained centroids. VALUES(1)
-    + a foldable projection optimizes to a LocalRelation, so the
-    BroadcastExchange materializes driver-side with no upstream query
-    (the old build side ran collect_list over the centroid relation —
-    an aggregate job per consumer). Why a broadcast JOIN instead of
-    putting :func:`_local_candidate_expr` straight into the consumer's
-    projection: the join is a CollapseProject BOUNDARY, so the
-    streamed side's derived array columns (unit vectors, residuals)
-    stay materialized once per row — inlined into the per-candidate
-    argmin lambda they re-evaluate per candidate (measured 4× the
-    norm fold per row, ~2.5× the assignment pass)."""
+    broadcast build side for trained centroids. VALUES(1) + a foldable
+    projection optimizes to a LocalRelation, so the BroadcastExchange
+    materializes driver-side with no upstream query (a build side over
+    a centroid relation runs an aggregate job per consumer). Why a
+    broadcast JOIN instead of putting :func:`_local_candidate_expr`
+    straight into the consumer's projection: the join is a
+    CollapseProject BOUNDARY, so the streamed side's derived array
+    columns (unit vectors, residuals) stay materialized once per row —
+    inlined into the per-candidate argmin lambda they re-evaluate per
+    candidate (measured 4× the norm fold per row, ~2.5× the assignment
+    pass)."""
     return spark.sql("VALUES (1)").select(
         _local_candidate_expr(rows).alias("cands")
     )
@@ -185,43 +225,48 @@ def spread_to_cores(df: DataFrame) -> DataFrame:
     return df
 
 
-def kmeans_assign(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: (vid, v) × (cid, c) -> (vid, v, cid).
-    Ties break to the lowest cid.
+def _scored_candidates(e: DataFrame, cands_rel: DataFrame) -> DataFrame:
+    """(vid, v) rows spread to core count (see :func:`spread_to_cores`
+    — a no-op at scale), each carrying ⟨v,v⟩ as ``_vv`` and the
+    broadcast one-row candidate array ``cands``."""
+    return (
+        spread_to_cores(e)
+        .withColumn("_vv", vec_dot("v", "v"))
+        .crossJoin(F.broadcast(cands_rel))
+    )
 
-    Round-12 shape (guide §2.3/§2.4): the k centroids collapse to a
-    one-row broadcast array and the argmin is a whole-stage-codegen
-    ``array_min`` over (dist2, cid) structs — struct ordering IS the
-    old ``row_number().over(orderBy(dist2, cid))`` tie-break, NaNs
-    greatest, so the selected cid is bit-identical. The previous
-    formulation exploded k rows per vector and paid an Exchange + Sort
-    + Window per assignment pass; this one never shuffles at all —
-    at 100 TB each Lloyd round's assignment was a full-corpus-×-k
-    shuffle, now zero. Small inputs are spread to core count first
-    (see :func:`spread_to_cores` — a no-op at scale) so the
-    expression pass parallelizes without the old window's incidental
-    shuffle.
 
-    When ``cent`` was trained driver-side (``_local_rows`` carried by
-    :func:`kmeans_centroids_local`) the candidate array ships as a
-    LITERAL instead of a broadcast — zero jobs (see
-    :func:`_local_candidate_expr`), same doubles."""
-    e = spread_to_cores(e)
-    rows = getattr(cent, "_local_rows", None)
-    base = e.withColumn("_vv", vec_dot("v", "v"))
-    if rows is not None:
-        cands_rel = _local_candidates_rel(e.sparkSession, rows)
-        scored = base.crossJoin(F.broadcast(cands_rel))
-    else:
-        scored = base.crossJoin(F.broadcast(_centroid_candidates(cent)))
+def _assign(e: DataFrame, cands_rel: DataFrame) -> DataFrame:
+    """The one nearest-centroid assignment body, shared by the Lloyd
+    loop (``cands_rel`` = :func:`_centroid_candidates` of the running
+    centroid relation) and :func:`kmeans_assign` (``cands_rel`` =
+    :func:`_local_candidates_rel` of the trained centroids).
+
+    Round-12 shape (guide §2.3/§2.4): the argmin is a
+    whole-stage-codegen ``array_min`` over (dist2, cid) structs —
+    struct ordering IS the old ``row_number().over(orderBy(dist2,
+    cid))`` tie-break, NaNs greatest, so the selected cid is
+    bit-identical. The previous formulation exploded k rows per vector
+    and paid an Exchange + Sort + Window per assignment pass; this one
+    never shuffles at all — at 100 TB each Lloyd round's assignment
+    was a full-corpus-×-k shuffle, now zero."""
     best = F.array_min(_scored_struct_array(vv_col="_vv"))
     return (
-        scored.select("vid", "v", best["cid"].alias("cid"))
+        _scored_candidates(e, cands_rel)
+        .select("vid", "v", best["cid"].alias("cid"))
         .where(F.col("cid").isNotNull())
     )
 
 
-def kmeans_assign_topn(e: DataFrame, cent: DataFrame, n: int = 2) -> DataFrame:
+def kmeans_assign(e: DataFrame, cent: Centroids) -> DataFrame:
+    """Nearest-centroid assignment: (vid, v) × trained ``[(cid, c)]``
+    -> (vid, v, cid). Ties break to the lowest cid. The candidate array
+    ships as a literal one-row broadcast (:func:`_local_candidates_rel`
+    — no jobs); the pass itself is :func:`_assign`."""
+    return _assign(e, _local_candidates_rel(e.sparkSession, cent))
+
+
+def kmeans_assign_topn(e: DataFrame, cent: Centroids, n: int = 2) -> DataFrame:
     """Top-n nearest centroids per vector: (vid, v, cid, probe_rank)
     with probe_rank 1..n. The multi-probe half of an IVF index —
     probing the runner-up cell recovers the neighbors a hard
@@ -231,21 +276,11 @@ def kmeans_assign_topn(e: DataFrame, cent: DataFrame, n: int = 2) -> DataFrame:
     (semantic_screen_ivf's probed corpus) don't need a vid self-join
     to recover the vector.
 
-    Same round-12 expression-level formulation as
-    :func:`kmeans_assign`: ``array_sort`` over (dist2, cid) structs is
-    exactly the old window's (dist2, cid) order (NaNs greatest), the
-    first ``n`` slots explode to probe_rank 1..n — no Exchange, no
-    Sort, no Window. Small inputs spread to core count first (no-op
-    at scale). Driver-side-trained centroids ship as a literal
-    candidate array (zero jobs) — see :func:`kmeans_assign`."""
-    e = spread_to_cores(e)
-    rows = getattr(cent, "_local_rows", None)
-    base = e.withColumn("_vv", vec_dot("v", "v"))
-    if rows is not None:
-        cands_rel = _local_candidates_rel(e.sparkSession, rows)
-        scored = base.crossJoin(F.broadcast(cands_rel))
-    else:
-        scored = base.crossJoin(F.broadcast(_centroid_candidates(cent)))
+    Same expression-level formulation as :func:`_assign`:
+    ``array_sort`` over (dist2, cid) structs is exactly the old
+    window's (dist2, cid) order (NaNs greatest), the first ``n`` slots
+    explode to probe_rank 1..n — no Exchange, no Sort, no Window."""
+    scored = _scored_candidates(e, _local_candidates_rel(e.sparkSession, cent))
     ranked = F.slice(F.array_sort(_scored_struct_array(vv_col="_vv")), 1, n)
     return scored.select(
         "vid", "v", F.posexplode(ranked).alias("pos", "sc")
@@ -259,7 +294,7 @@ def kmeans_assign_topn(e: DataFrame, cent: DataFrame, n: int = 2) -> DataFrame:
 
 def _lloyd_local(
     rows: list[tuple[int, list[float]]], k: int, iters: int
-) -> list[tuple[int, list[float]]]:
+) -> Centroids:
     """Driver-side Lloyd over a BOUNDED sample, bit-identical to the
     distributed loop (``kmeans_centroids`` / ``_pq_train``) — the
     round-12 trainer for the ``train_limit`` paths. FAISS trains
@@ -271,11 +306,8 @@ def _lloyd_local(
     wall with zero data volume). Exactness, step by step:
 
     - seeds: vids < k, ascending (same rows as the WHERE vid < k seed);
-    - dist² = ⟨v,v⟩ − 2·⟨v,c⟩ + ⟨c,c⟩ with each dot a LEFT fold of
-      IEEE-double multiply-adds — Python floats are the same IEEE
-      doubles, same order → identical bits;
-    - argmin tie-break = lexicographic (dist2, cid), the window's
-      (dist2, cid) order;
+    - assignment: :func:`_nearest_local` — the engine's dist² folds
+      and its (dist2, cid) struct ordering;
     - mean = ROUND(CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE)/n, 9):
       Spark's double→decimal cast goes through Double.toString (the
       shortest round-trip repr — Python ``repr`` produces the same
@@ -284,90 +316,63 @@ def _lloyd_local(
       rounded on both sides (``BigDecimal.doubleValue`` /
       ``float(Decimal)``); ROUND(x, 9) is BigDecimal.valueOf(x) —
       Double.toString again — setScale(9, HALF_UP), i.e.
-      ``Decimal(repr(x)).quantize(1E-9, HALF_UP)``.
+      ``Decimal(repr(x)).quantize(1E-9, HALF_UP)``;
+    - non-finite components: the cast turns NaN, ±Inf (and NULL) into
+      NULL — Spark does so even with ANSI on — so SUM skips them while
+      COUNT(1) still counts the row, and a dimension with no finite
+      value averages to NULL (``None`` here). NULL components then
+      propagate through the dot folds as in the engine.
 
-    tests/test_ann_recall.py pins the equivalence against the
-    distributed loop on real data; every consumer plan stays
-    oracle-hash-verified."""
+    ``test_trainer_gate_is_value_identical`` in tests/test_ann_recall.py
+    pins the equivalence against the distributed loop; every consumer
+    plan stays oracle-hash-verified."""
+    import math
     from decimal import ROUND_HALF_UP, Decimal
 
     q12 = Decimal("1E-12")
     q9 = Decimal("1E-9")
 
-    def dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
+    def dec12(x):
+        if x is None or not math.isfinite(x):
+            return None
+        return Decimal(repr(x)).quantize(q12, ROUND_HALF_UP)
+
+    def mean9(total, n):
+        if total is None:
+            return None
+        return float(Decimal(repr(float(total) / n)).quantize(q9, ROUND_HALF_UP))
 
     cent = [(vid, list(v)) for vid, v in rows if vid < k]
     for _ in range(iters):
-        cands = [(cid, c, dot(c, c)) for cid, c in cent]
+        cands = [(cid, c, _dot_local(c, c)) for cid, c in cent]
         agg: dict[int, list] = {}
-        for vid, v in rows:
-            vv = dot(v, v)
-            best: tuple[int, float, int] | None = None
-            for cid, c, cc in cands:
-                d2 = vv - 2.0 * dot(v, c) + cc
-                # NaN-greatest ordering key, matching the engine's
-                # struct comparator exactly (r12 ADVICE): a bare
-                # (d2, cid) tuple never displaces a NaN best because
-                # every NaN comparison is False in Python, whereas the
-                # engine sorts NaN greatest and ties NaN==NaN by cid.
-                key = (1, 0.0, cid) if d2 != d2 else (0, d2, cid)
-                if best is None or key < best:
-                    best = key
-            if best is None:
+        for _vid, v in rows:
+            cid = _nearest_local(v, cands)
+            if cid is None:
                 continue
-            slot = agg.setdefault(best[2], [0, None])
+            slot = agg.setdefault(cid, [0, [None] * len(v)])
             slot[0] += 1
-            if slot[1] is None:
-                slot[1] = [Decimal(repr(x)).quantize(q12, ROUND_HALF_UP) for x in v]
-            else:
-                for i, x in enumerate(v):
-                    slot[1][i] += Decimal(repr(x)).quantize(q12, ROUND_HALF_UP)
+            sums = slot[1]
+            for i, x in enumerate(v):
+                dx = dec12(x)
+                if dx is not None:
+                    sums[i] = dx if sums[i] is None else sums[i] + dx
         cent = [
-            (
-                cid,
-                [
-                    float(
-                        Decimal(repr(float(s) / n)).quantize(q9, ROUND_HALF_UP)
-                    )
-                    for s in sums
-                ],
-            )
+            (cid, [mean9(t, n) for t in sums])
             for cid, (n, sums) in sorted(agg.items())
         ]
     return cent
 
 
-def kmeans_centroids_local(
-    train: DataFrame, k: int, iters: int
-) -> DataFrame:
-    """Driver-side trainer entry: collect the BOUNDED (vid, v) training
-    relation (the ``vid < train_limit`` sample; callers gate this path
-    on ``LOCAL_TRAIN_MAX``, so the collect is a few MB at most), run
-    :func:`_lloyd_local`, and parallelize the k centroids back as a
-    (cid, c) relation. One collect job replaces ~3 s of per-round
-    shuffle/checkpoint machinery; float values round-trip exactly
-    through Arrow/pickle in both directions."""
-    rows = [(r[0], list(r[1])) for r in train.select("vid", "v").collect()]
-    rows.sort(key=lambda t: t[0])
-    cent = _lloyd_local(rows, k, iters)
-    spark = train.sparkSession
-    out = spark.createDataFrame(
-        [(cid, c) for cid, c in cent], schema="cid long, c array<double>"
+def _collect_vectors(df: DataFrame) -> list[tuple]:
+    """Collect a small relation whose LAST column is a vector as
+    ``(key..., [doubles])`` tuples sorted by the key columns — one job.
+    Used for bounded training samples (callers gate on
+    ``LOCAL_TRAIN_MAX``) and for the k×d trained centroids."""
+    return sorted(
+        (tuple(r[:-1]) + (list(r[-1]),) for r in df.collect()),
+        key=lambda t: t[:-1],
     )
-    # Consumers that only need the candidate/centroid VALUES read this
-    # and skip the relation entirely (literal expressions, zero jobs);
-    # the DataFrame stays the public return for relational consumers.
-    out._local_rows = cent
-    # The collected training sample itself: lets a downstream trainer
-    # that needs a transform OF THE SAME SAMPLE (IVFADC's residual
-    # codebooks) derive it driver-side instead of paying a second
-    # collect job (see similarity._residual_subs_local).
-    out._train_rows = rows
-    return out
 
 
 def _recompute_centroids(assign: DataFrame) -> DataFrame:
@@ -400,9 +405,11 @@ def kmeans_centroids(
     k: int = 4,
     iters: int = 2,
     train_limit: int | None = None,
-) -> DataFrame:
+) -> Centroids:
     """Train the coarse quantizer: ``iters`` Lloyd rounds from the k
-    lowest-id seeds. Returns (cid, c).
+    lowest-id seeds. Returns the centroids as a ``[(cid, c)]`` list in
+    cid order — k×d doubles, KBs by contract — for
+    :func:`kmeans_assign` / :func:`kmeans_assign_topn`.
 
     ``train_limit``: when set, Lloyd trains ONLY on rows with
     ``vid < train_limit`` — the production bounded-sample recipe
@@ -412,14 +419,15 @@ def kmeans_centroids(
     WHERE clause). Assignment of the full corpus against the trained
     centroids is the caller's (cheap, single-pass) job.
 
-    Round 12: the bounded-``train_limit`` path trains DRIVER-SIDE
-    (:func:`kmeans_centroids_local` — bit-identical arithmetic, see
-    :func:`_lloyd_local`); the unbounded path keeps the distributed
-    loop."""
+    Two trainers, same values (see :data:`LOCAL_TRAIN_MAX`): a sample
+    bounded by ``train_limit <= LOCAL_TRAIN_MAX`` is collected once
+    and trained driver-side (:func:`_lloyd_local`); otherwise the
+    distributed loop runs — :func:`_assign` plus the exact-decimal
+    update per round — and only the final k centroids are collected."""
     e = df.select(F.col(id_col).alias("vid"), as_double_array(vec_col).alias("v"))
     train = e.where(F.col("vid") < train_limit) if train_limit is not None else e
     if train_limit is not None and train_limit <= LOCAL_TRAIN_MAX:
-        return kmeans_centroids_local(train, k, iters)
+        return _lloyd_local(_collect_vectors(train), k, iters)
     cent = train.where(F.col("vid") < k).select(
         F.col("vid").alias("cid"), F.col("v").alias("c")
     )
@@ -427,10 +435,10 @@ def kmeans_centroids(
         # k tiny rows; without the checkpoint every later broadcast of
         # cent re-executes ALL previous rounds (broadcast exchanges are
         # re-planned per consumer), making the loop quadratic in iters.
-        cent = _recompute_centroids(kmeans_assign(train, cent)).localCheckpoint(
-            eager=False
-        )
-    return cent
+        cent = _recompute_centroids(
+            _assign(train, _centroid_candidates(cent))
+        ).localCheckpoint(eager=False)
+    return _collect_vectors(cent)
 
 
 def kmeans_fit_predict(
@@ -449,7 +457,7 @@ def kmeans_fit_predict(
     )
     assign = None
     for _ in range(iters):
-        assign = kmeans_assign(e, cent)
+        assign = _assign(e, _centroid_candidates(cent))
         cent = _recompute_centroids(assign).localCheckpoint(eager=False)
     sizes = assign.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vecs"))
     return (

@@ -649,7 +649,8 @@ def semdedup(
     (vid, cid, component, cent_sim, kept). Vectors with no near-dup are
     untouched (implicitly kept) and not emitted.
 
-    Scale shape: the quantizer trains on broadcast-centroid passes (see
+    Scale shape: the quantizer trains on broadcast-centroid passes and
+    returns its k centroids as a literal list (see
     ``operators/clustering.py``); the pair search is blocked by learned
     cell — at corpus scale each cell is a co-partitioned self-join, so
     the O(n²) cross join never materializes; components run over the
@@ -659,7 +660,7 @@ def semdedup(
     from pyspark.sql.window import Window as W
 
     from ..functions.vectors import as_double_array, vec_dot
-    from .clustering import kmeans_assign, kmeans_centroids
+    from .clustering import _own_centroid, kmeans_assign, kmeans_centroids
 
     e = df.select(F.col(id_col).alias("vid"), as_double_array(vec_col).alias("v"))
     cent = kmeans_centroids(df, id_col, vec_col, k=k, iters=iters)
@@ -671,11 +672,10 @@ def semdedup(
     # Similarity of each member to its own (unit-normalized) centroid.
     # One row per vector (id, cell, unit vec, centroid sim) — consumed
     # by the pair join twice, the components loop, and the keep rule.
-    # Checkpoint it so the 2·iters-round Lloyd chain executes ONCE.
-    with_sim = (
-        unit.join(F.broadcast(cent), "cid")
-        .withColumn("cent_sim", vec_dot("u", "c") / F.sqrt(vec_dot("c", "c")))
-        .drop("c")
+    # Checkpoint it so the assign + normalize pass executes ONCE.
+    c = _own_centroid(cent)
+    with_sim = unit.withColumn(
+        "cent_sim", vec_dot("u", c) / F.sqrt(vec_dot(c, c))
     ).localCheckpoint(eager=True)
     a = _spread(with_sim, "vid").select(
         "cid", F.col("vid").alias("v1"), F.col("u").alias("u1")

@@ -24,6 +24,10 @@ from pyspark.sql.window import Window as W
 
 from ..functions.vectors import vec_dot, with_unit_vector
 
+#: Trained PQ codebooks: ``[(s, cid, c)]`` sorted by (s, cid),
+#: m×codes_k×d doubles (KBs).
+Codebooks = list[tuple[int, int, list[float]]]
+
 
 def brute_force_topk(
     corpus: DataFrame,
@@ -154,14 +158,16 @@ def _pq_train(
     codes_k: int,
     iters: int,
     train_limit: int | None = None,
-) -> DataFrame:
-    """One Lloyd chain keyed by the subspace index ``s`` over
-    (vid, s, v) sub-vector rows: train a ``codes_k``-word codebook per
-    subspace (seeds = lowest ids, exact-decimal means — the same
-    deterministic trainer recipe as ``operators.clustering``).
-    Returns the codebooks (s, cid, c). Shared by the plain-PQ and the
-    IVFADC residual quantizers; the corpus encode is the callers'
-    shuffle-free expression pass (see :func:`_pq_encode_codes`).
+) -> Codebooks:
+    """The distributed PQ trainer: one Lloyd chain keyed by the
+    subspace index ``s`` over (vid, s, v) sub-vector rows, training a
+    ``codes_k``-word codebook per subspace (seeds = lowest ids,
+    exact-decimal means — the same deterministic trainer recipe as
+    ``operators.clustering``). Collects and returns the codebooks as
+    an ``[(s, cid, c)]`` list sorted by (s, cid) — m×codes_k×d doubles.
+    Shared by the plain-PQ and the IVFADC residual quantizers; the
+    corpus encode is the callers' shuffle-free expression pass (see
+    :func:`_pq_encode_codes`).
 
     ``train_limit``: when set, the Lloyd rounds train ONLY on rows with
     ``vid < train_limit`` — the production FAISS recipe, which fits
@@ -189,7 +195,7 @@ def _pq_train(
     mirrors the same recipe and tests/test_ann_recall.py pins the
     measured floor). If recall degrades at larger k_coarse, seed
     per-cell instead."""
-    from .clustering import _scored_struct_array
+    from .clustering import _collect_vectors, _scored_struct_array
 
     train = (
         subs.where(F.col("vid") < train_limit) if train_limit is not None else subs
@@ -231,13 +237,13 @@ def _pq_train(
                 lambda st: st["mn"],
             ).alias("c")
         ).localCheckpoint(eager=False)
-    return cent
+    return _collect_vectors(cent)
 
 
-def _pq_train_rows(
+def _pq_lloyd_local(
     sub_rows: list[tuple[int, int, list[float]]], codes_k: int, iters: int
-) -> list[tuple[int, int, list[float]]]:
-    """Driver-side PQ training core over already-local (vid, s, v)
+) -> Codebooks:
+    """The driver-side PQ trainer over already-local (vid, s, v)
     sub-vector rows: the bit-identical local Lloyd chain per subspace
     (``operators.clustering._lloyd_local`` — see its exactness notes).
     Returns the (s, cid, c) codebook rows."""
@@ -254,81 +260,89 @@ def _pq_train_rows(
     return out
 
 
+def _sub_slices(col: str, m: int, d: int):
+    """The ``m`` length-``d`` sub-vectors of the array column ``col``."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda i: F.slice(col, i * d + 1, d),
+    )
+
+
+def _pq_fit(
+    e: DataFrame,
+    vec_col: str,
+    m: int,
+    d: int,
+    codes_k: int,
+    iters: int,
+    train_limit: int | None,
+) -> Codebooks:
+    """Train PQ codebooks on the ``m`` sub-vectors of ``vec_col`` over
+    the (vid, vec_col) relation ``e``. A sample bounded by
+    ``train_limit <= LOCAL_TRAIN_MAX`` is collected once and trained
+    driver-side (:func:`_pq_lloyd_local`); otherwise the distributed
+    :func:`_pq_train` chain runs over the (possibly filtered) sample.
+    Both return the same values (see ``clustering.LOCAL_TRAIN_MAX``)."""
+    from .clustering import LOCAL_TRAIN_MAX, _collect_vectors
+
+    if train_limit is not None and train_limit <= LOCAL_TRAIN_MAX:
+        tsubs = e.where(F.col("vid") < train_limit).select(
+            "vid", F.posexplode(_sub_slices(vec_col, m, d)).alias("s", "v")
+        )
+        return _pq_lloyd_local(_collect_vectors(tsubs), codes_k, iters)
+    # Only the training sample explodes to sub-vector rows (the corpus
+    # encode is expression-level); checkpoint it once so the explode
+    # never re-executes across Lloyd rounds.
+    subs = e.select(
+        "vid", F.posexplode(_sub_slices(vec_col, m, d)).alias("s", "v")
+    ).localCheckpoint(eager=False)
+    return _pq_train(subs, codes_k, iters, train_limit)
+
+
 def _residual_subs_local(
     trows: list[tuple[int, list[float]]],
-    cent_rows: list[tuple[int, list[float]]],
+    cent: list[tuple[int, list[float]]],
     m: int,
     d: int,
 ) -> list[tuple[int, int, list[float]]]:
     """The IVFADC residual training sample, derived DRIVER-SIDE from
-    the coarse trainer's already-collected (vid, u) sample: assign each
-    sample vector to its nearest trained centroid and slice the
-    residual into m sub-vectors — the same rows the engine pipeline
+    the coarse trainer's already-collected (vid, u) sample ``trows``:
+    assign each sample vector to its nearest trained centroid and slice
+    the residual into m sub-vectors — the same rows the engine pipeline
     (kmeans_assign → zip_with subtract → posexplode slices → collect)
     would produce, without the second collect job. Exactness: the
-    argmin is the identical lexicographic (dist2, cid) pick with the
-    identical left-fold dots (see ``clustering._lloyd_local``);
-    residual subtraction and slicing are elementwise IEEE doubles on
-    both sides."""
-    from .clustering import _dot_local
+    argmin is ``clustering._nearest_local`` (the engine's dist² folds
+    and struct ordering); residual subtraction and slicing are
+    elementwise IEEE doubles on both sides, NULL if either side is."""
+    from .clustering import _dot_local, _nearest_local
 
-    cands = [(cid, c, _dot_local(c, c)) for cid, c in cent_rows]
-    cmap = {cid: c for cid, c, _ in cands}
+    cands = [(cid, c, _dot_local(c, c)) for cid, c in cent]
+    cmap = dict(cent)
     out = []
     for vid, v in trows:
-        vv = _dot_local(v, v)
-        best: tuple[int, float, int] | None = None
-        for cid, c, cc in cands:
-            d2 = vv - 2.0 * _dot_local(v, c) + cc
-            # NaN-greatest key — same comparator note as _lloyd_local
-            key = (1, 0.0, cid) if d2 != d2 else (0, d2, cid)
-            if best is None or key < best:
-                best = key
-        if best is None:
+        cid = _nearest_local(v, cands)
+        if cid is None:
             continue
-        c = cmap[best[2]]
-        r = [a - b for a, b in zip(v, c)]
+        r = [
+            None if a is None or b is None else a - b
+            for a, b in zip(v, cmap[cid])
+        ]
         for si in range(m):
             out.append((vid, si, r[si * d : (si + 1) * d]))
     return out
 
 
-def _pq_train_local(subs: DataFrame, codes_k: int, iters: int) -> DataFrame:
-    """Driver-side PQ trainer for the BOUNDED ``train_limit`` paths:
-    collect the (vid, s, v) training sub-vector sample (train_limit × m
-    rows — callers gate this path on ``clustering.LOCAL_TRAIN_MAX``, so
-    the collect is a few MB at most, never the FAISS ~1M-vector design
-    point, which falls back to the distributed loop), run the
-    bit-identical local
-    Lloyd chain per subspace (:func:`_pq_train_rows`), and parallelize
-    the (s, cid, c) codebooks back. Replaces ~3 s of per-round
-    shuffle/checkpoint machinery with one collect job; the unbounded
-    path keeps :func:`_pq_train`."""
-    rows = [
-        (r[0], r[1], list(r[2])) for r in subs.select("vid", "s", "v").collect()
-    ]
-    out = _pq_train_rows(rows, codes_k, iters)
-    cent = subs.sparkSession.createDataFrame(
-        out, schema="s int, cid long, c array<double>"
-    )
-    # Mirrors kmeans_centroids_local: codebook VALUES ride the plan as
-    # literals for expression-level consumers (zero jobs per consumer).
-    cent._local_rows = out
-    return cent
-
-
-def _pq_local_cands_map(rows: list[tuple[int, int, list[float]]]):
-    """{s -> [(cid, c, cc)]} as ONE folded LITERAL map — the
-    driver-side-trained twin of :func:`_pq_cands_map`: same struct
-    schema, same ``cc`` doubles (local left-fold dot, see
-    ``clustering._dot_local``), but ZERO jobs — no groupBy, no
-    map_from_entries aggregate, no BroadcastExchange per consumer.
+def _pq_local_cands_map(rows: Codebooks):
+    """{s -> [(cid, c, cc)]} as ONE folded LITERAL map: ``cc`` is the
+    local left-fold dot (see ``clustering._dot_local``), so every
+    double matches an engine-side build — with ZERO jobs: no groupBy,
+    no map_from_entries aggregate, no BroadcastExchange per consumer.
     Foldable from_json delivery (see ``clustering._local_candidate_expr``
     for why naive array literals are ruinously expensive).
     m × codes_k × (d+2) doubles: KBs by construction."""
     import json
 
-    from .clustering import _dot_local
+    from .clustering import _dot_local, _json_doubles
 
     by_s: dict[int, list] = {}
     for s, cid, c in rows:
@@ -340,7 +354,7 @@ def _pq_local_cands_map(rows: list[tuple[int, int, list[float]]]):
                 "value": [
                     {
                         "cid": int(cid),
-                        "c": [float(x) for x in c],
+                        "c": _json_doubles(c),
                         "cc": _dot_local(c, c),
                     }
                     for cid, c in by_s[s]
@@ -358,63 +372,47 @@ def _pq_local_cands_map(rows: list[tuple[int, int, list[float]]]):
     )
 
 
-def _pq_local_cands_rel(spark, rows: list[tuple[int, int, list[float]]]):
-    """ONE-ROW LocalRelation holding the literal codebook map — the
-    broadcast build side for driver-side-trained codebooks (same
-    column name/shape as :func:`_pq_cands_map`, no upstream query, no
-    aggregate job). The broadcast JOIN — rather than inlining the
-    literal into the consumer's projection — is deliberate: the join
-    is a CollapseProject boundary, so the corpus's derived residual /
-    unit-vector columns stay materialized once per row instead of
-    re-evaluating inside the m-way encode lambda (measured 16× the
-    residual computation per row when inlined)."""
+def _pq_local_cands_rel(spark, rows: Codebooks):
+    """ONE-ROW LocalRelation holding the literal codebook map ``cmap``
+    — the broadcast build side of the corpus encode and the per-query
+    LUT (no upstream query, no aggregate job). The broadcast JOIN —
+    rather than inlining the literal into the consumer's projection —
+    is deliberate: the join is a CollapseProject boundary, so the
+    corpus's derived residual / unit-vector columns stay materialized
+    once per row instead of re-evaluating inside the m-way encode
+    lambda (measured 16× the residual computation per row when
+    inlined)."""
     return spark.sql("VALUES (1)").select(
         _pq_local_cands_map(rows).alias("cmap")
     )
 
 
-def _pq_dds_expr(qu_col: str, cmap, m: int, d: int, codes_k: int):
-    """The per-query ADC LUT map {s·codes_k+cid -> dd} computed as ONE
-    expression over the query's unit vector against the literal
-    codebook map ``cmap`` — replaces the explode-to-(q_id,s) + codebook
-    join + groupBy/collect chain that built the same map relationally.
-    dd = ⟨slice(qu, s·d+1, d), codeword⟩ — the identical fold the join
-    formulation produced, so every looked-up double is bit-identical."""
-    return F.map_from_entries(
+def _pq_query_luts(
+    qe: DataFrame, cmap_rel: DataFrame, m: int, d: int, codes_k: int
+) -> DataFrame:
+    """(q_id, dds): each query's ADC LUT map {s·codes_k+cid -> dd},
+    computed as ONE expression over its unit vector ``qu`` against the
+    broadcast literal codebook map ``cmap`` — no explode, no codebook
+    join, no groupBy. dd = ⟨slice(qu, s·d+1, d), codeword⟩, the same
+    fold a relational LUT build produces, so every looked-up double is
+    bit-identical."""
+    dds = F.map_from_entries(
         F.flatten(
             F.transform(
                 F.sequence(F.lit(0), F.lit(m - 1)),
                 lambda s: F.transform(
-                    F.element_at(cmap, s.cast("int")),
+                    F.element_at(F.col("cmap"), s.cast("int")),
                     lambda cd: F.struct(
                         (s * codes_k + cd["cid"]).cast("int").alias("k"),
                         vec_dot(
-                            F.slice(F.col(qu_col), s * d + 1, d), cd["c"]
+                            F.slice(F.col("qu"), s * d + 1, d), cd["c"]
                         ).alias("dd"),
                     ),
                 ),
             )
         )
     )
-
-
-def _pq_cands_map(cent: DataFrame) -> DataFrame:
-    """ONE row holding {s -> [(cid, c, cc)]} — the broadcast side of
-    the expression-level corpus encode. m x codes_k x (d+2) doubles:
-    KBs by construction, scale-independent of the corpus."""
-    return (
-        cent.groupBy("s")
-        .agg(
-            F.collect_list(
-                F.struct("cid", "c", vec_dot("c", "c").alias("cc"))
-            ).alias("cands")
-        )
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("s", "cands"))
-            ).alias("cmap")
-        )
-    )
+    return qe.crossJoin(F.broadcast(cmap_rel)).select("q_id", dds.alias("dds"))
 
 
 def _pq_encode_codes(vec_col: str, m: int, d: int):
@@ -433,10 +431,7 @@ def _pq_encode_codes(vec_col: str, m: int, d: int):
     2.5 s -> 1.2 s warm for the sf0.1 encode); the dist² doubles are
     unchanged (same folds, same values)."""
     subvv = F.transform(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda i: F.slice(F.col(vec_col), i * d + 1, d),
-        ),
+        _sub_slices(vec_col, m, d),
         lambda sv: F.struct(sv.alias("sv"), vec_dot(sv, sv).alias("vv")),
     )
     return F.transform(
@@ -454,24 +449,6 @@ def _pq_encode_codes(vec_col: str, m: int, d: int):
                 ),
             )
         )["cid"],
-    )
-
-
-def _pq_lut_map(lut: DataFrame, codes_k: int) -> DataFrame:
-    """Pack the per-query ADC LUT rows (q_id, s, cid, dd) as one row
-    per query: {s * codes_k + cid -> dd} — query-dimension-sized,
-    broadcast for the expression-level scoring pass."""
-    return lut.groupBy("q_id").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    (F.col("s") * codes_k + F.col("cid"))
-                    .cast("int")
-                    .alias("k"),
-                    F.col("dd"),
-                )
-            )
-        ).alias("dds")
     )
 
 
@@ -559,62 +536,20 @@ def pq_topk(
             "u",
         ).select("vid", "u")
     )
-    slices = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda i: F.slice("u", i * d + 1, d),
+    cb = _pq_fit(e, "u", m, d, codes_k, iters, train_limit)
+    # The trained codebooks ride the plan as literals: the corpus
+    # encode and the per-query LUT need no codebook relation and run
+    # no jobs — only values (same doubles).
+    cmap_rel = _pq_local_cands_rel(corpus.sparkSession, cb)
+    enc = e.crossJoin(F.broadcast(cmap_rel)).select(
+        "vid", _pq_encode_codes("u", m, d).alias("codes")
     )
-    # Only the TRAINING sample explodes to sub-vector rows now (the
-    # corpus encode below is expression-level); checkpoint it once so
-    # the explode+normalize never re-executes across Lloyd rounds.
-    from .clustering import LOCAL_TRAIN_MAX
-
-    if train_limit is not None and train_limit <= LOCAL_TRAIN_MAX:
-        tsubs = e.where(F.col("vid") < train_limit).select(
-            "vid", F.posexplode(slices).alias("s", "v")
-        )
-        cent = _pq_train_local(tsubs, codes_k, iters)
-    else:
-        # train_limit above the driver-side gate (or unbounded): the
-        # RETAINED distributed Lloyd chain trains on the (possibly
-        # filtered) sample — identical values (see LOCAL_TRAIN_MAX).
-        subs = e.select(
-            "vid", F.posexplode(slices).alias("s", "v")
-        ).localCheckpoint(eager=False)
-        cent = _pq_train(subs, codes_k, iters, train_limit)
-    # Driver-side-trained codebooks ride the plan as literals: the
-    # corpus encode and the per-query LUT need no codebook relation,
-    # no broadcast exchange, no jobs — only values (same doubles).
-    cb_rows = getattr(cent, "_local_rows", None)
-    if cb_rows is not None:
-        cmap_rel = _pq_local_cands_rel(corpus.sparkSession, cb_rows)
-        enc = e.crossJoin(F.broadcast(cmap_rel)).select(
-            "vid", _pq_encode_codes("u", m, d).alias("codes")
-        )
-    else:
-        enc = e.crossJoin(F.broadcast(_pq_cands_map(cent))).select(
-            "vid", _pq_encode_codes("u", m, d).alias("codes")
-        )
-
     qe = with_unit_vector(
         queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("v0")),
         "v0",
         "qu",
     ).select("q_id", "qu")
-    if cb_rows is not None:
-        dds_rel = qe.crossJoin(F.broadcast(cmap_rel)).select(
-            "q_id",
-            _pq_dds_expr("qu", F.col("cmap"), m, d, codes_k).alias("dds"),
-        )
-    else:
-        qslices = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda i: F.slice("qu", i * d + 1, d),
-        )
-        qsub = qe.select("q_id", F.posexplode(qslices).alias("s", "qs"))
-        lut = qsub.join(F.broadcast(cent), "s").select(
-            "q_id", "s", "cid", vec_dot("qs", "c").alias("dd")
-        )
-        dds_rel = _pq_lut_map(lut, codes_k)
+    dds_rel = _pq_query_luts(qe, cmap_rel, m, d, codes_k)
 
     scored_q = (
         enc.crossJoin(F.broadcast(dds_rel))
@@ -681,6 +616,56 @@ def pq_topk(
     )
 
 
+def _ivfpq_fit(
+    e: DataFrame,
+    k_coarse: int,
+    coarse_iters: int,
+    m: int,
+    d: int,
+    codes_k: int,
+    iters: int,
+    train_limit: int | None,
+) -> tuple[list[tuple[int, list[float]]], Codebooks, DataFrame]:
+    """Train both IVFADC quantizers over the (vid, u) unit vectors
+    ``e``: the coarse centroids ``[(cid, c)]``, then the residual PQ
+    codebooks. Also returns the corpus residual relation
+    (vid, cell, r = u − c(cell)) the encode reads.
+
+    A sample bounded by ``train_limit <= LOCAL_TRAIN_MAX`` is collected
+    ONCE: the coarse trainer runs on it driver-side and the residual
+    training sample is derived from it driver-side too
+    (:func:`_residual_subs_local`), so there is no second collect job.
+    Otherwise both quantizers use the distributed loops. Both routes
+    return the same values (see ``clustering.LOCAL_TRAIN_MAX``)."""
+    from .clustering import (
+        LOCAL_TRAIN_MAX,
+        _collect_vectors,
+        _lloyd_local,
+        _own_centroid,
+        kmeans_assign,
+        kmeans_centroids,
+    )
+
+    bounded = train_limit is not None and train_limit <= LOCAL_TRAIN_MAX
+    if bounded:
+        trows = _collect_vectors(e.where(F.col("vid") < train_limit))
+        cent = _lloyd_local(trows, k_coarse, coarse_iters)
+    else:
+        cent = kmeans_centroids(
+            e, "vid", "u", k=k_coarse, iters=coarse_iters, train_limit=train_limit
+        )
+    res = kmeans_assign(e.select("vid", F.col("u").alias("v")), cent).select(
+        "vid",
+        F.col("cid").alias("cell"),
+        F.zip_with("v", _own_centroid(cent), lambda a, b: a - b).alias("r"),
+    )
+    if bounded:
+        cb = _pq_lloyd_local(_residual_subs_local(trows, cent, m, d), codes_k, iters)
+    else:
+        cb = _pq_fit(res, "r", m, d, codes_k, iters, train_limit)
+    return cent, cb, res
+
+
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -742,7 +727,7 @@ def ivfpq_topk(
     if n_dims % m != 0:
         raise ValueError(f"dim {n_dims} not divisible by m={m}")
     d = n_dims // m
-    from .clustering import kmeans_assign, kmeans_assign_topn, kmeans_centroids
+    from .clustering import _own_centroid, kmeans_assign_topn
     from .stats import grouped_row_numbers
 
     e = with_unit_vector(
@@ -750,117 +735,29 @@ def ivfpq_topk(
         "v0",
         "u",
     ).select("vid", "u")
-    cent = kmeans_centroids(
-        e, "vid", "u", k=k_coarse, iters=coarse_iters, train_limit=train_limit
+    cent, cb, res = _ivfpq_fit(
+        e, k_coarse, coarse_iters, m, d, codes_k, iters, train_limit
     )
-    assigned = kmeans_assign(e.select("vid", F.col("u").alias("v")), cent)
-    # Driver-side-trained coarse centroids: fetch a row's own centroid
-    # from a literal {cid -> c} map instead of a broadcast join — zero
-    # jobs, same doubles (see clustering._local_centroid_map).
-    cent_rows = getattr(cent, "_local_rows", None)
-    if cent_rows is not None:
-        from .clustering import _local_centroid_map
-
-        _cmap = _local_centroid_map(cent_rows)
-        res = assigned.select(
-            "vid",
-            F.col("cid").alias("cell"),
-            F.zip_with(
-                "v", F.element_at(_cmap, F.col("cid")), lambda a, b: a - b
-            ).alias("r"),
-        )
-    else:
-        res = assigned.join(F.broadcast(cent), "cid").select(
-            "vid",
-            F.col("cid").alias("cell"),
-            F.zip_with("v", "c", lambda a, b: a - b).alias("r"),
-        )
-    slices = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda i: F.slice("r", i * d + 1, d),
+    # zero-shuffle residual encode: (vid, cell, m codes) — see pq_topk
+    cmap_rel = _pq_local_cands_rel(corpus.sparkSession, cb)
+    enc = res.crossJoin(F.broadcast(cmap_rel)).select(
+        "vid", "cell", _pq_encode_codes("r", m, d).alias("codes")
     )
-    # Only the TRAINING sample explodes to residual sub-vector rows
-    # (the corpus encode below is expression-level); bounded samples
-    # train driver-side, the unbounded path keeps the distributed loop.
-    from .clustering import LOCAL_TRAIN_MAX
-
-    if train_limit is not None and train_limit <= LOCAL_TRAIN_MAX:
-        trows = getattr(cent, "_train_rows", None)
-        if trows is not None and cent_rows is not None:
-            # One collect total: the residual training sample is the
-            # coarse trainer's sample transformed driver-side (see
-            # _residual_subs_local) — the second collect job the
-            # engine-side tsubs chain paid is gone.
-            cb = None
-            cb_rows = _pq_train_rows(
-                _residual_subs_local(trows, cent_rows, m, d), codes_k, iters
-            )
-        else:
-            tsubs = res.where(F.col("vid") < train_limit).select(
-                "vid", F.posexplode(slices).alias("s", "v")
-            )
-            cb = _pq_train_local(tsubs, codes_k, iters)
-            cb_rows = cb._local_rows
-    else:
-        # above the driver-side gate (or unbounded): distributed Lloyd
-        # over the (possibly filtered) residual sample — see
-        # clustering.LOCAL_TRAIN_MAX for the why and the equivalence.
-        subs = res.select(
-            "vid", F.posexplode(slices).alias("s", "v")
-        ).localCheckpoint(eager=False)
-        cb = _pq_train(subs, codes_k, iters, train_limit)
-        cb_rows = None
-    # zero-shuffle residual encode: (vid, cell, m codes) — see pq_topk;
-    # driver-side-trained codebooks ride the plan as literals.
-    if cb_rows is not None:
-        cmap_rel = _pq_local_cands_rel(corpus.sparkSession, cb_rows)
-        enc = res.crossJoin(F.broadcast(cmap_rel)).select(
-            "vid", "cell", _pq_encode_codes("r", m, d).alias("codes")
-        )
-    else:
-        enc = res.crossJoin(F.broadcast(_pq_cands_map(cb))).select(
-            "vid", "cell", _pq_encode_codes("r", m, d).alias("codes")
-        )
-
     qe = with_unit_vector(
         queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("v0")),
         "v0",
         "qu",
     ).select("q_id", "qu")
-    if cb_rows is not None:
-        dds_rel = qe.crossJoin(F.broadcast(cmap_rel)).select(
-            "q_id",
-            _pq_dds_expr("qu", F.col("cmap"), m, d, codes_k).alias("dds"),
-        )
-    else:
-        qslices = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda i: F.slice("qu", i * d + 1, d),
-        )
-        qsub = qe.select("q_id", F.posexplode(qslices).alias("s", "qs"))
-        lut = qsub.join(F.broadcast(cb), "s").select(
-            "q_id", "s", "cid", vec_dot("qs", "c").alias("dd")
-        )
-        dds_rel = _pq_lut_map(lut, codes_k)
+    dds_rel = _pq_query_luts(qe, cmap_rel, m, d, codes_k)
     probes = kmeans_assign_topn(
         qe.select(F.col("q_id").alias("vid"), F.col("qu").alias("v")),
         cent,
         n=n_probe,
+    ).select(
+        F.col("vid").alias("q_id"),
+        F.col("cid").alias("cell"),
+        vec_dot("v", _own_centroid(cent)).alias("qc"),
     )
-    if cent_rows is not None:
-        probes = probes.select(
-            F.col("vid").alias("q_id"),
-            F.col("cid").alias("cell"),
-            vec_dot("v", F.element_at(_cmap, F.col("cid"))).alias("qc"),
-        )
-    else:
-        probes = (
-            probes.select(
-                F.col("vid").alias("q_id"), F.col("cid").alias("cell"), "v"
-            )
-            .join(F.broadcast(cent.withColumnRenamed("cid", "cell")), "cell")
-            .select("q_id", "cell", vec_dot("v", "c").alias("qc"))
-        )
 
     # candidates = codes of the probed cells: the CELL-EQUI-JOIN against
     # the broadcast probe relation is still the IVF prune (never a

@@ -75,9 +75,10 @@ def register(
 #       compressed dense sides (operators/similarity.py);
 #     ann_topk_pq / ann_topk_pq_refine / ann_topk_ivfpq — same rank
 #       machinery + the NaN-greatest local-argmin key and the
-#       LOCAL_TRAIN_MAX trainer gate (values identical by
-#       construction; the gate only reroutes >4096-row samples to the
-#       retained distributed loop);
+#       LOCAL_TRAIN_MAX trainer gate (the gate only reroutes
+#       >4096-row samples to the retained distributed loop; values
+#       identical, pinned by test_trainer_gate_is_value_identical in
+#       tests/test_ann_recall.py);
 #     dedup_keep_best_scored / pipeline_retention_materialize /
 #     pipeline_dedup_card — the connected-components large-star
 #       distinct removal (set-identical by construction) + the r12

@@ -369,14 +369,15 @@ def test_hybrid_alpha_col_matches_global_weight_where_alphas_agree(
 def test_local_residual_sample_matches_engine_chain(spark, sf_dir):
     # The round-12 single-collect IVFADC trainer derives the residual
     # training sample DRIVER-SIDE from the coarse trainer's collected
-    # sample (similarity._residual_subs_local). Pin bit-exact
-    # equivalence against the engine-side chain it replaced
-    # (kmeans_assign -> broadcast centroid fetch -> zip_with subtract
-    # -> posexplode slices) on the real embeddings.
+    # sample (similarity._residual_subs_local, which takes that sample
+    # as an argument). Pin bit-exact equivalence against the
+    # engine-side chain it replaced (kmeans_assign -> centroid join ->
+    # zip_with subtract -> posexplode slices) on the real embeddings.
     from pyspark.sql import functions as F
 
     from aics_dask_utils_spark.functions.vectors import with_unit_vector
     from aics_dask_utils_spark.operators.clustering import (
+        _collect_vectors,
         kmeans_assign,
         kmeans_centroids,
     )
@@ -392,8 +393,9 @@ def test_local_residual_sample_matches_engine_chain(spark, sf_dir):
         "u",
     ).select("vid", "u")
     cent = kmeans_centroids(e, "vid", "u", k=4, iters=2, train_limit=64)
+    cent_rel = spark.createDataFrame(cent, "cid long, c array<double>")
     assigned = kmeans_assign(e.select("vid", F.col("u").alias("v")), cent)
-    res = assigned.join(F.broadcast(cent), "cid").select(
+    res = assigned.join(cent_rel, "cid").select(
         "vid", F.zip_with("v", "c", lambda a, b: a - b).alias("r")
     )
     slices = F.transform(
@@ -406,10 +408,93 @@ def test_local_residual_sample_matches_engine_chain(spark, sf_dir):
         .select("vid", F.posexplode(slices).alias("s", "v"))
         .collect()
     }
+    sample = _collect_vectors(e.where(F.col("vid") < 64))
     local = {
-        (vid, s): v
-        for vid, s, v in _residual_subs_local(
-            cent._train_rows, cent._local_rows, m, d
-        )
+        (vid, s): v for vid, s, v in _residual_subs_local(sample, cent, m, d)
     }
     assert engine == local  # bit-exact: same keys, same doubles
+
+
+def _train_all(e, train_limit, k, iters, m, d, codes_k):
+    """Every trained quantizer over the (vid, u) relation ``e``:
+    k-means centroids, PQ codebooks, IVFADC coarse + residual
+    codebooks — all plain lists."""
+    from aics_dask_utils_spark.operators.clustering import kmeans_centroids
+    from aics_dask_utils_spark.operators.similarity import _ivfpq_fit, _pq_fit
+
+    coarse, residual, _ = _ivfpq_fit(
+        e, k, iters, m, d, codes_k, iters, train_limit
+    )
+    return {
+        "kmeans": kmeans_centroids(
+            e, "vid", "u", k=k, iters=iters, train_limit=train_limit
+        ),
+        "pq": _pq_fit(e, "u", m, d, codes_k, iters, train_limit),
+        "ivfadc_coarse": coarse,
+        "ivfadc_residual": residual,
+    }
+
+
+def _assert_gate_identical(monkeypatch, e, train_limit, **kw):
+    # Default gate: the driver-side trainers. Gate 0: the distributed
+    # loops on the same bounded sample. ``repr`` compares every double
+    # exactly (shortest round-trip digits; -0.0 and nan spelled out).
+    from aics_dask_utils_spark.operators import clustering as C
+
+    local = _train_all(e, train_limit, **kw)
+    monkeypatch.setattr(C, "LOCAL_TRAIN_MAX", 0)
+    dist = _train_all(e, train_limit, **kw)
+    for name in local:
+        assert local[name], name
+        assert repr(local[name]) == repr(dist[name]), name
+
+
+def test_trainer_gate_is_value_identical(spark, sf_dir, monkeypatch):
+    # LOCAL_TRAIN_MAX only chooses WHERE a bounded sample trains:
+    # pure-Python Lloyd on the driver or the distributed loop. Both
+    # must return the same centroids and codebooks bit for bit, or the
+    # gate would change query results.
+    from pyspark.sql import functions as F
+
+    from aics_dask_utils_spark.functions.vectors import with_unit_vector
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = with_unit_vector(
+        emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v0")),
+        "v0",
+        "u",
+    ).select("vid", "u")
+    _assert_gate_identical(
+        monkeypatch, e, 64, k=4, iters=2, m=16, d=4, codes_k=16
+    )
+
+
+@pytest.mark.parametrize(
+    "bad,row,iters",
+    [
+        # a non-seed row with a NaN component: the engine's decimal
+        # cast makes it NULL, so SUM skips it while COUNT(1) counts it
+        (float("nan"), 3, 1),
+        # ±Inf casts to NULL the same way (the local Decimal used to
+        # raise InvalidOperation)
+        (float("inf"), 3, 1),
+        (float("-inf"), 3, 1),
+        # a NaN SEED: its cluster has no finite value in dimension 0,
+        # so that centroid component is NULL and the next round's
+        # NULL distances sort first
+        (float("nan"), 0, 2),
+    ],
+)
+def test_trainer_gate_agrees_on_non_finite_components(
+    spark, monkeypatch, bad, row, iters
+):
+    rows = []
+    for i in range(10):
+        v = [float(i % 3), 1.0 + 0.1 * i, 2.0 - 0.05 * i, 0.01 * i * i]
+        if i == row:
+            v[0] = bad
+        rows.append((i, v))
+    e = spark.createDataFrame(rows, "vid long, u array<double>")
+    _assert_gate_identical(
+        monkeypatch, e, 10, k=2, iters=iters, m=2, d=2, codes_k=2
+    )

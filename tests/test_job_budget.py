@@ -70,3 +70,55 @@ def test_cc_star_job_budget(spark, monkeypatch, gate, construct_jobs, collect_jo
         runs.append((len(built), len(read), built, read))
     n, m, built, read = min(runs, key=lambda r: r[:2])
     assert (n, m) == (construct_jobs, collect_jobs), (built, read)
+
+
+def _embeddings(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def test_bounded_ivfpq_construction_job_budget(spark, sf_dir):
+    # A bounded sample (train_limit <= LOCAL_TRAIN_MAX) trains both
+    # IVFADC quantizers from ONE collect of the sample; everything else
+    # ships the trained values as literals, so building the plan runs
+    # exactly that one job.
+    from pyspark.sql import functions as F
+
+    from aics_dask_utils_spark.operators.similarity import ivfpq_topk
+
+    emb = _embeddings(spark, sf_dir)
+    queries = emb.where(F.col("vec_id") < 3)
+    runs = [
+        _run_jobs(spark, lambda: ivfpq_topk(emb, queries, train_limit=64))[0]
+        for _ in range(2)
+    ]
+    built = min(runs, key=len)
+    assert len(built) == 1, built
+
+
+def test_unbounded_kmeans_train_and_assign_job_budget(spark, sf_dir):
+    # The distributed loop: preparing each lazily checkpointed round
+    # starts its broadcast jobs (10 over the two rounds), and one
+    # collect returns the k centroids. Assigning with the returned list
+    # broadcasts a literal candidate array, so the assignment pass runs
+    # only its own 3 jobs.
+    from pyspark.sql import functions as F
+
+    from aics_dask_utils_spark.functions.vectors import as_double_array
+    from aics_dask_utils_spark.operators.clustering import (
+        kmeans_assign,
+        kmeans_centroids,
+    )
+
+    emb = _embeddings(spark, sf_dir)
+    e = emb.select(
+        F.col("vec_id").alias("vid"), as_double_array("embedding").alias("v")
+    )
+    runs = []
+    for _ in range(2):
+        built, cent = _run_jobs(spark, lambda: kmeans_centroids(emb, k=4, iters=2))
+        assert [cid for cid, _ in cent] == [0, 1, 2, 3]
+        read, rows = _run_jobs(spark, kmeans_assign(e, cent).collect)
+        assert len(rows) == emb.count()
+        runs.append((len(built), len(read), built, read))
+    n, m, built, read = min(runs, key=lambda r: r[:2])
+    assert (n, m) == (11, 3), (built, read)

@@ -528,49 +528,28 @@ def test_welch_ttest_is_moments_only(spark, sf_dir):
 _BROADCAST_ALLOWLIST: dict[tuple[str, str], str] = {
     ("operators/bloom.py", "bits"):
         "contract: Bloom bit-set, <= m rows by construction",
-    ("operators/clustering.py", "cent"): "contract: k centroids",
-    ("operators/clustering.py", "_centroid_candidates(cent)"):
-        "contract: ONE row holding the k-centroid candidate array "
-        "(k x (dim+2) doubles — KBs; the expression-argmin build side)",
-    ("operators/dedup.py", "cent"): "contract: k centroids (SemDeDup)",
     ("operators/graph.py", 'nodes.agg(F.count(F.lit(1)).alias("n_nodes"))'):
         "scalar: 1-row node count",
     ("operators/sampling.py", "mn"): "scalar: 1-row global min count",
     ("operators/sampling.py", "ratios"): "grid: one row per stratum",
-    ("operators/similarity.py", "cent"): "contract: k centroids",
-    ("operators/similarity.py", "lut"): "contract: |queries| x k ADC LUT",
     ("operators/similarity.py", "qe"): "contract: query embeddings",
     ("operators/similarity.py", "q"): "contract: query side (bounded by API)",
-    ("operators/similarity.py", "cb"): "contract: m x codes_k PQ codebooks",
     ("operators/similarity.py", "cands"):
         "contract: m rows, each holding the codes_k-word candidate "
         "array for one subspace (m x codes_k x (d+2) doubles — KBs; "
         "the expression-argmin build side of the PQ Lloyd chain)",
-    ("operators/similarity.py", "_pq_cands_map(cent)"):
-        "contract: ONE row holding {s -> codes_k candidates} — the "
-        "zero-shuffle PQ corpus-encode build side (KBs)",
-    ("operators/similarity.py", "_pq_cands_map(cb)"):
-        "contract: ONE row holding {s -> codes_k candidates} — the "
-        "zero-shuffle IVFADC residual-encode build side (KBs)",
-    ("operators/similarity.py", "_pq_lut_map(lut, codes_k)"):
-        "contract: one row per query holding the m x codes_k ADC LUT "
-        "map — query-dimension-sized, scale-independent of the corpus",
     ("operators/clustering.py", "cands_rel"):
-        "contract: ONE-ROW LocalRelation of k literal (cid, c, cc) "
-        "candidates (driver-side-trained centroids) — KBs by "
-        "construction, no upstream query",
+        "contract: ONE row holding the k-centroid (cid, c, cc) "
+        "candidate array — a literal LocalRelation of trained "
+        "centroids, or the Lloyd loop's aggregate over its k-row "
+        "centroid relation; k x (dim+2) doubles, KBs",
     ("operators/similarity.py", "cmap_rel"):
         "contract: ONE-ROW LocalRelation of the literal {s -> codes_k "
-        "candidates} codebook map (driver-side-trained PQ) — m x "
-        "codes_k x (d+2) doubles, KBs by construction",
+        "candidates} codebook map (trained PQ) — m x codes_k x (d+2) "
+        "doubles, KBs by construction",
     ("operators/similarity.py", "dds_rel"):
         "contract: one row per query holding the m x codes_k ADC LUT "
-        "map (literal-codebook or relational build — same relation as "
-        "_pq_lut_map) — query-dimension-sized, corpus-independent",
-    (
-        "operators/similarity.py",
-        'cent.withColumnRenamed("cid", "cell")',
-    ): "contract: k_coarse centroids (IVFADC base-term join)",
+        "map — query-dimension-sized, corpus-independent",
     (
         "operators/similarity.py",
         "probes",
@@ -727,6 +706,15 @@ def test_no_unbounded_broadcast_hints():
         "it to _BROADCAST_ALLOWLIST with the justification; otherwise "
         f"remove the hint and let AQE decide: {unlisted}"
     )
+
+
+def test_broadcast_allowlist_has_no_stale_entries():
+    """Every allowlist entry must match a live F.broadcast call site: a
+    justification left behind after its call site is deleted would
+    silently pre-approve a future hint of the same name."""
+    sites = {(rel, arg) for rel, _lineno, arg in _broadcast_call_sites()}
+    stale = sorted(k for k in _BROADCAST_ALLOWLIST if k not in sites)
+    assert not stale, stale
 
 
 def test_broadcast_lint_catches_violations():
