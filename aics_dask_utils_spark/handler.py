@@ -30,6 +30,18 @@ serializable callable — the reference's fully dynamic contract
 per-element imperative execution over opaque objects, so this module is
 the one sanctioned RDD user in the engine; schema-ful work should use
 DataFrames (see :mod:`aics_dask_utils_spark.plans`).
+
+Python task fixed cost: an explicit ``batch_size`` pays one Spark job
+per batch, so per-task latency adds up. Before each task PySpark calls
+``importlib.invalidate_caches()``, which on CPython <= 3.12 re-parses
+the central directory of every zip on the worker path (pyspark.zip,
+py4j, the spark-core jar: ~0.23 s per task). For local masters
+:func:`~aics_dask_utils_spark.session.get_spark` runs workers under
+:mod:`aics_dask_utils_spark._worker_daemon`, which re-reads an archive
+only when its stat changed. Cluster masters keep PySpark's own daemon,
+because executors there need not have the engine installed. A caller's
+``extra_conf`` may name another ``spark.python.daemon.module``; the
+engine then sets neither of its two worker keys.
 """
 
 from __future__ import annotations

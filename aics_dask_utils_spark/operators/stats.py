@@ -720,6 +720,28 @@ def calibration_bins(
     )
 
 
+#: ``monotonically_increasing_id`` packs ``partition << 33 | local row``.
+_MID_ROW_BITS = 33
+
+
+def _decode_mid(df: DataFrame) -> DataFrame:
+    """Append ``_pid`` (int partition id) and ``_lr`` (1-based long local
+    row) decoded from ``_mid``, a ``monotonically_increasing_id`` stamped
+    after a within-partition sort.
+
+    Spark keeps the partition id in the upper 31 bits and the row index
+    in the lower 33, so one partition holds at most 2^33 rows; past that
+    the row index carries into the partition id and both decode wrong.
+    Partition ids >= 2^30 set the sign bit, so the shift is unsigned.
+    """
+    return df.withColumn(
+        "_pid", F.shiftrightunsigned("_mid", _MID_ROW_BITS).cast("int")
+    ).withColumn(
+        "_lr",
+        F.col("_mid").bitwiseAND(F.lit((1 << _MID_ROW_BITS) - 1)) + F.lit(1),
+    )
+
+
 def global_row_numbers(
     df: DataFrame,
     order_cols: list,
@@ -808,15 +830,11 @@ def grouped_row_numbers(
     composite = [F.asc(c) for c in group_cols] + [
         F.col(c) if isinstance(c, str) else c for c in order_cols
     ]
-    r0 = (
+    r0 = _decode_mid(
         df.repartitionByRange(num_partitions, *composite)
         .sortWithinPartitions(*composite)
         .withColumn("_mid", F.monotonically_increasing_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
-        .withColumn("_pid", F.shiftright("_mid", 33).cast("int"))
-        .withColumn(
-            "_lr", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.lit(1)
-        )
     )
     # ONE pass: per-(partition, group) block -> (row count, first local
     # row). Blocks are contiguous, so the relation has at most
@@ -927,15 +945,11 @@ def global_running_sums(
     val_exprs = {
         out: (F.col(c) if isinstance(c, str) else c) for out, c in sums.items()
     }
-    r0 = (
+    r0 = _decode_mid(
         df.repartitionByRange(num_partitions, *order_exprs)
         .sortWithinPartitions(*order_exprs)
         .withColumn("_mid", F.monotonically_increasing_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
-        .withColumn("_pid", F.shiftright("_mid", 33).cast("int"))
-        .withColumn(
-            "_lr", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.lit(1)
-        )
     )
     totals = r0.groupBy("_pid").agg(
         F.count(F.lit(1)).alias("_c"),
@@ -978,8 +992,8 @@ def global_running_sums(
     # (events_rfm_segments probes 1.3 -> 1.7 s): the BroadcastExchange
     # serializes a driver collect per rank call, while AQE already
     # converts the unhinted join to a broadcast with a local shuffle
-    # read at runtime. The GROUPED rank path broadcasts its (provably
-    # tiny) block relations instead — see grouped_row_numbers.
+    # read at runtime. The grouped rank path leaves its block relations
+    # unhinted for the same reason — see grouped_row_numbers.
     out = out.join(offsets, "_pid")
     if row_col is not None:
         out = out.withColumn(

@@ -11,6 +11,9 @@ ones that matter at 100 TB:
 - Arrow enabled so pandas interchange and Pandas UDFs are columnar.
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and oracle-comparable.
+- Local masters run Python workers under the engine's own daemon
+  (:mod:`aics_dask_utils_spark._worker_daemon`), which spares every task
+  a ~0.23 s re-read of the zip archives on the worker path.
 """
 
 from __future__ import annotations
@@ -20,6 +23,25 @@ import os
 from pyspark.sql import SparkSession
 
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def _worker_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """Conf that runs Python workers under the engine's daemon.
+
+    Local masters only: cluster executors need not have the engine
+    installed. The PYTHONPATH lets workers import the daemon from any
+    working directory. A caller who sets either key gets neither, so
+    workers are never left half-configured.
+    """
+    if not (master == "local" or master.startswith("local[")):
+        return {}
+    conf = {
+        "spark.python.daemon.module": "aics_dask_utils_spark._worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))
+        ),
+    }
+    return {} if conf.keys() & (extra_conf or {}).keys() else conf
 
 
 def get_spark(
@@ -65,9 +87,8 @@ def get_spark(
         # extra_conf={"spark.sql.ansi.enabled": "false"}.
         .config("spark.sql.ansi.enabled", "true")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**_worker_conf(master, extra_conf), **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

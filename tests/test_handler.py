@@ -6,9 +6,13 @@ independent plain-Python baseline, order-insensitive (set) comparison;
 plus batched/unbatched cross-check and batch-size introspection.
 """
 
+import os
+import zipimport
+
 import pytest
 
 from aics_dask_utils_spark.handler import SparkHandler
+from aics_dask_utils_spark.session import _worker_conf
 
 
 @pytest.fixture(scope="module")
@@ -93,3 +97,35 @@ def test_map_forwards_kwargs(handler):
         lambda x, offset=0: x + offset, [1, 2, 3], offset=100
     )
     assert got == [101, 102, 103]
+
+
+@pytest.mark.skipif(
+    hasattr(zipimport.zipimporter, "_get_files"),
+    reason="this CPython's zipimporter reads its directory lazily; the guard is not installed",
+)
+def test_local_workers_do_not_reread_zip_directories(handler):
+    # Each task reports whether its worker runs the engine daemon's
+    # guard, and how many zip directories that worker has re-read.
+    def probe(_):
+        import zipimport
+
+        from aics_dask_utils_spark import _worker_daemon
+
+        guard = zipimport.zipimporter.invalidate_caches
+        return guard.__module__ == _worker_daemon.__name__, _worker_daemon.rereads
+
+    first = handler.gather(handler.map(probe, [0], num_slices=1))
+    second = handler.gather(handler.map(probe, [0], num_slices=1))
+    assert first[0][0] is True
+    assert second == [(True, 0)]
+
+
+def test_worker_conf_is_local_only_and_all_or_nothing():
+    conf = _worker_conf("local[4]", None)
+    assert conf["spark.python.daemon.module"] == "aics_dask_utils_spark._worker_daemon"
+    engine = os.path.join(conf["spark.executorEnv.PYTHONPATH"], "aics_dask_utils_spark")
+    assert os.path.isfile(os.path.join(engine, "_worker_daemon.py"))
+    assert _worker_conf("spark://h:7077", None) == {}
+    assert _worker_conf("yarn", None) == {}
+    for key in conf:
+        assert _worker_conf("local[4]", {key: "caller's"}) == {}

@@ -251,3 +251,22 @@ def test_mann_whitney_registered_plan(spark, sf_dir, duck):
     from aics_dask_utils_spark.testing import run_plan_vs_oracle
 
     run_plan_vs_oracle(spark, "events_mann_whitney", sf_dir, con=duck)
+
+
+def test_mid_decode_at_the_id_layout_boundaries(spark):
+    # monotonically_increasing_id = partition << 33 | local row, as a
+    # signed long; partition 2^31-1 sets the sign bit.
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from aics_dask_utils_spark.operators.stats import _decode_mid
+
+    cases = [
+        (p, r) for p in (0, 1, 2**31 - 1) for r in (0, 1, 2**33 - 1)
+    ]
+    signed = [((p << 33 | r) + 2**63) % 2**64 - 2**63 for p, r in cases]
+    schema = StructType([StructField("_mid", LongType(), False)])
+    df = spark.createDataFrame([(m,) for m in signed], schema)
+    got = [(row["_pid"], row["_lr"]) for row in _decode_mid(df).collect()]
+    assert got == [(p, r + 1) for p, r in cases]
+    types = dict(_decode_mid(df).dtypes)
+    assert (types["_pid"], types["_lr"]) == ("int", "bigint")
