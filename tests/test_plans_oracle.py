@@ -5,10 +5,16 @@ run the Spark plan and the oracle SQL over the same parquet, canonicalize,
 compare. Plans without an oracle get the driver's weaker rows-only check.
 """
 
+import os
+
 import pytest
 
 from aics_dask_utils_spark.plans import all_plans
-from aics_dask_utils_spark.testing import run_plan_vs_oracle
+from aics_dask_utils_spark.testing import (
+    DEFAULT_SF_DIR,
+    duckdb_connection,
+    run_plan_vs_oracle,
+)
 
 PLAN_NAMES = sorted(all_plans())
 
@@ -91,3 +97,53 @@ def test_schema_lint_rejects_complex_types(spark):
     with pytest.raises(AssertionError, match="complex-typed final columns"):
         assert_scalar_schema(df.schema, context="synthetic-array-plan")
     assert_scalar_schema(spark.range(1).schema, context="scalar-ok")
+
+
+def _largest_operator_rows(con, sql, profile_path):
+    """Largest output cardinality of any operator in DuckDB's JSON
+    profile of `sql` (rendered EXPLAIN truncates operator names, so the
+    profile tree is read instead)."""
+    import json
+
+    con.execute("PRAGMA enable_profiling='json'")
+    con.execute(f"PRAGMA profiling_output='{profile_path}'")
+    try:
+        con.execute(sql).fetchall()
+    finally:
+        con.execute("PRAGMA disable_profiling")
+    with open(profile_path) as f:
+        stack, largest = [json.load(f)], 0
+    while stack:
+        node = stack.pop()
+        largest = max(largest, node["cardinality"])
+        stack.extend(node["children"])
+    return largest
+
+
+SF001_DIR = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+
+
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(SF001_DIR, "lineitem.parquet")),
+    reason="needs the sf0.01 tables",
+)
+@pytest.mark.parametrize("name", ["graph_label_propagation", "graph_pagerank_nations"])
+def test_nation_graph_oracles_stay_linear_in_lineitem(tmp_path, name):
+    """The nation-graph oracles must never build an intermediate larger
+    than lineitem. With a plain (inlined) `edges` CTE, DuckDB pushes the
+    LPA oracle's `src <> dst` below the GROUP BY and nested-loop-joins
+    customer x supplier: 1,440,519 rows at sf0.01, ~144M per copy at
+    sf0.1 — enough to spill the disk full and get the test session's
+    JVM OOM-killed."""
+    con = duckdb_connection(SF001_DIR)
+    try:
+        n_lineitem = con.execute("SELECT COUNT(*) FROM lineitem").fetchone()[0]
+        largest = _largest_operator_rows(
+            con, all_plans()[name].oracle, str(tmp_path / "profile.json")
+        )
+    finally:
+        con.close()
+    assert largest <= n_lineitem, (
+        f"{name} oracle: an operator emits {largest:,} rows, more than the "
+        f"{n_lineitem:,} lineitem rows"
+    )
