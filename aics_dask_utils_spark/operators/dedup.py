@@ -221,12 +221,12 @@ def minhash_lsh_pairs(
         )
     rows_per_band = num_hashes // bands
     # Hash each shingle ONCE into its two 48-bit md5 halves and persist
-    # that narrow (doc_id, h1, h2) relation: it feeds three consumers
-    # (signatures, per-doc set sizes, candidate verification) and the
-    # md5+conv per shingle is the chain's dominant per-row cost.
+    # that narrow (doc_id, h1, h2) relation: it feeds two consumers
+    # (signatures with per-doc set sizes, candidate verification) and
+    # the md5+conv per shingle is the chain's dominant per-row cost.
     # ReuseExchange only dedups the shuffle WITHIN one stage graph;
-    # persisting dedups the hashing itself across all three (measured
-    # 3.0s -> 1.7s at sf0.1, warm min-of-2).
+    # persisting dedups the hashing itself across both (measured
+    # 3.0s -> 1.7s at sf0.1, warm min-of-2, with three consumers).
     from pyspark.storagelevel import StorageLevel
 
     ex = _doc_shingles(df, id_col, text_col, k)
@@ -242,7 +242,12 @@ def minhash_lsh_pairs(
         )
         for i in range(num_hashes)
     ]
-    sigs = hashed.groupBy("doc_id").agg(*aggs)
+    # The per-doc shingle-set size rides the signature aggregate and
+    # travels with each doc through the band buckets, so verification
+    # needs no second doc_id aggregate and no size joins.
+    sigs = hashed.groupBy("doc_id").agg(
+        *aggs, F.count(F.lit(1)).alias("n_sg")
+    )
     band_cols = []
     for b in range(bands):
         slot = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
@@ -259,8 +264,12 @@ def minhash_lsh_pairs(
             )
         )
     banded = sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+        "doc_id", "n_sg", F.explode(F.array(*band_cols)).alias("bb")
+    ).select(
+        F.struct("doc_id", "n_sg").alias("m"),
+        F.col("bb.band").alias("band"),
+        F.col("bb.bh").alias("bh"),
+    )
     # Bucket-grouped pair enumeration, NOT a banded-self-join: a self-join
     # would evaluate the whole signature pipeline twice (self-join alias
     # rewriting defeats ReuseExchange — measured 6.3s vs 1.9s at sf0.1)
@@ -269,7 +278,9 @@ def minhash_lsh_pairs(
     # is ~|bucket|² over single-digit buckets. At corpus scale a
     # degenerate hot bucket (e.g. empty docs) is the known hazard — cap
     # it upstream by exact-dedup'ing first (pipeline_clean_corpus does).
-    ids = F.array_sort(F.collect_list("doc_id"))
+    # Members are (doc_id, n_sg) structs: a doc sits in a band's bucket
+    # once, so sorting them sorts by doc_id.
+    ids = F.array_sort(F.collect_list("m"))
     cand = (
         banded.groupBy("band", "bh")
         .agg(ids.alias("ids"))
@@ -284,14 +295,17 @@ def minhash_lsh_pairs(
                                 "ids", i + 2, F.size(F.col("ids"))
                             ),
                             lambda y: F.struct(
-                                x.alias("d1"), y.alias("d2")
+                                x["doc_id"].alias("d1"),
+                                y["doc_id"].alias("d2"),
+                                x["n_sg"].alias("n1"),
+                                y["n_sg"].alias("n2"),
                             ),
                         ),
                     )
                 )
             ).alias("p")
         )
-        .select("p.d1", "p.d2")
+        .select("p.d1", "p.d2", "p.n1", "p.n2")
         .distinct()
     )
     # Verify ONLY the candidates: fan each candidate out to d1's shingles
@@ -305,7 +319,6 @@ def minhash_lsh_pairs(
     # broadcast builds serialize, 11s), and narrow HOF signatures via
     # zip_with folds (projection collapse re-evaluates the hash arrays
     # per slot, 20s+ vs 3s); un-persisted single-pass was 3.4s.
-    sizes = hashed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sg"))
     e1 = hashed.alias("e1")
     e2 = hashed.alias("e2")
     inter = (
@@ -316,19 +329,11 @@ def minhash_lsh_pairs(
             & (F.col("e1.h1") == F.col("e2.h1"))
             & (F.col("e1.h2") == F.col("e2.h2")),
         )
-        .groupBy("d1", "d2")
+        .groupBy("d1", "d2", "n1", "n2")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n_sg").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n_sg").alias("n2"))
-    # No broadcast hint on sizes: O(corpus docs), not O(candidates) —
-    # a forced broadcast is a driver-OOM at billions of docs (r5
-    # verdict). Unhinted, AQE broadcasts `inter` (small by LSH
-    # construction: only banded candidate pairs) instead.
     return (
-        inter.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn(
+        inter.withColumn(
             "jaccard",
             F.col("inter").cast("double")
             / (F.col("n1") + F.col("n2") - F.col("inter")),
@@ -659,16 +664,14 @@ def semdedup(
     sum of per-cell squares, both embarrassingly partitionable."""
     from pyspark.sql.window import Window as W
 
-    from ..functions.vectors import as_double_array, vec_dot
+    from ..functions.vectors import as_double_array, vec_divide, vec_dot
     from .clustering import _own_centroid, kmeans_assign, kmeans_centroids
 
     e = df.select(F.col(id_col).alias("vid"), as_double_array(vec_col).alias("v"))
     cent = kmeans_centroids(df, id_col, vec_col, k=k, iters=iters)
     assigned = kmeans_assign(e, cent)
     nrm = F.sqrt(vec_dot("v", "v"))
-    unit = assigned.withColumn("u", F.transform("v", lambda x: x / nrm)).select(
-        "vid", "cid", "u"
-    )
+    unit = assigned.withColumn("u", vec_divide("v", nrm)).select("vid", "cid", "u")
     # Similarity of each member to its own (unit-normalized) centroid.
     # One row per vector (id, cell, unit vec, centroid sim) — consumed
     # by the pair join twice, the components loop, and the keep rule.

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.binding import let
+
 #: Minimal per-language stopword lists for the n-gram/stopword heuristic
 #: language-ID. Ordered dict: ties break towards the earlier entry.
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -125,19 +127,36 @@ def fingerprint_bag(col: Column | str) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(col)))))
 
 
-def shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles (the MinHash/Jaccard unit)."""
-    t = tokens(col)
-    idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
-    # sequence(1, n) with n < 1 DESCENDS in Spark — guard short docs to [].
-    return F.when(F.size(t) >= k, F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(t, (i + j).cast("int")) for j in range(k)]
+def ngrams(col: Column | str, k: int) -> Column:
+    """Every k-word n-gram of the document in token order, repeats
+    kept; ``[]`` for documents shorter than k words (and NULL text).
+
+    The token array is bound once per document with
+    :func:`~aics_dask_utils_spark.functions.binding.let`. Referenced
+    inline, ``tokens(col)`` would sit inside the per-position lambda,
+    which Spark evaluates per element with no common-subexpression
+    elimination: the document would be re-tokenized at every position,
+    O(n²) per document."""
+
+    def _grams(t: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
+        # sequence(1, n) with n < 1 DESCENDS in Spark — guard short docs to [].
+        return F.when(
+            F.size(t) >= k,
+            F.transform(
+                idx,
+                lambda i: F.concat_ws(" ", *[F.element_at(t, i + j) for j in range(k)]),
             ),
-        )
-    )).otherwise(F.array().cast("array<string>"))
+        ).otherwise(F.array().cast("array<string>"))
+
+    return let(tokens(col), _grams)
+
+
+def shingles(col: Column | str, k: int = 3) -> Column:
+    """Distinct k-word shingles (the MinHash/Jaccard unit), in order of
+    first occurrence; each document is tokenized once (see
+    :func:`ngrams`)."""
+    return F.array_distinct(ngrams(col, k))
 
 
 def tf_idf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

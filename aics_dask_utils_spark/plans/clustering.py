@@ -173,7 +173,7 @@ def ann_topk_learned_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from ..functions.vectors import as_double_array, vec_dot
+    from ..functions.vectors import as_double_array, vec_divide, vec_dot
     from ..operators.clustering import kmeans_assign, kmeans_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -185,9 +185,7 @@ def ann_topk_learned_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = kmeans_assign(e, cent)
     nrm = F.sqrt(vec_dot("v", "v"))
-    unit = assigned.withColumn(
-        "u", F.transform("v", lambda x: x / nrm)
-    ).select("vid", "cid", "u")
+    unit = assigned.withColumn("u", vec_divide("v", nrm)).select("vid", "cid", "u")
     q = unit.where(F.col("vid") < 5).select(
         F.col("vid").alias("q_id"), F.col("cid").alias("cell"), F.col("u").alias("qu")
     )
@@ -251,7 +249,7 @@ def ann_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from ..functions.vectors import as_double_array, vec_dot
+    from ..functions.vectors import as_double_array, vec_divide, vec_dot
     from ..operators.clustering import (
         kmeans_assign,
         kmeans_assign_topn,
@@ -272,7 +270,7 @@ def ann_topk_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the query side and the corpus side both consume the
     # normalized relation; without this the assign+normalize re-runs
     unit = (
-        assigned.withColumn("u", F.transform("v", lambda x: x / nrm))
+        assigned.withColumn("u", vec_divide("v", nrm))
         .select("vid", "cid", "u")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.binding import let
 from ..operators import text as T
 from ..sources import load_table
 from . import register
@@ -149,20 +150,8 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    t = T.tokens("text")
-    bigrams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 1),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(t, i.cast("int")),
-                F.element_at(t, (i + 1).cast("int")),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     cnts = (
-        docs.select("doc_id", F.explode(bigrams).alias("bigram"))
+        docs.select("doc_id", F.explode(T.ngrams("text", 2)).alias("bigram"))
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -409,8 +398,6 @@ def text_exact_substring_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     L = 9
-    t = T.tokens("text")
-    starts = F.sequence(F.lit(1), F.size(t) - (L - 1))  # 1-based starts
     # sequence(1, n) DESCENDS for n < 1 — guard short docs out first.
     # Persist the span relation: BOTH consumers below (the duplicated-
     # content groupBy and the semi-join probe) read it, and without
@@ -418,16 +405,21 @@ def text_exact_substring_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # span-enumerated TWICE (measured 12.2 -> 6.5 s at sf0.1).
     from pyspark import StorageLevel
 
+    # The token array is bound once per document (`let`): inline, the
+    # per-start lambda would re-tokenize the document at every start.
     spans = (
-        docs.where(F.size(t) >= L)
+        docs.where(F.size(T.tokens("text")) >= L)
         .select(
             "doc_id",
             F.explode(
-                F.transform(
-                    starts,
-                    lambda i: F.struct(
-                        i.cast("long").alias("start"),
-                        F.concat_ws(" ", F.slice(t, i, L)).alias("s"),
+                let(
+                    T.tokens("text"),
+                    lambda t: F.transform(
+                        F.sequence(F.lit(1), F.size(t) - (L - 1)),
+                        lambda i: F.struct(
+                            i.cast("long").alias("start"),
+                            F.concat_ws(" ", F.slice(t, i, L)).alias("s"),
+                        ),
                     ),
                 )
             ).alias("sp"),
@@ -955,16 +947,20 @@ def pipeline_rag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice(F.col("toks"), F.col("start") + 1, F.lit(C)), " "
         ).alias("ctext"),
     )
-    h = F.md5("ctext")
+    # md5 bound once per chunk: the single-use `ctext` projection is
+    # inlined into the lambda, which would re-hash it per component
     vec = ch.select(
         "ck",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(7)),
-            lambda i: F.conv(h.substr(i * 4 + 1, F.lit(4)), 16, 10).cast(
-                "bigint"
-            )
-            / 32767.5
-            - 1,
+        let(
+            F.md5("ctext"),
+            lambda h: F.transform(
+                F.sequence(F.lit(0), F.lit(7)),
+                lambda i: F.conv(h.substr(i * 4 + 1, F.lit(4)), 16, 10).cast(
+                    "bigint"
+                )
+                / 32767.5
+                - 1,
+            ),
         ).alias("v"),
     )
     un = with_unit_vector(vec, "v", "u")

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.binding import let
 from ..operators.multimodal import binary_meta
 from ..sources import load_table
 from . import register
@@ -358,8 +359,12 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("path").cast("long").alias("doc_id"),
         F.concat_ws(
             "",
-            F.transform(
-                px, lambda p: F.when(p >= mean, F.lit("1")).otherwise(F.lit("0"))
+            # the mean is bound once per image, not re-folded per pixel
+            let(
+                mean,
+                lambda m: F.transform(
+                    px, lambda p: F.when(p >= m, F.lit("1")).otherwise(F.lit("0"))
+                ),
             ),
         ).alias("ahash"),
     )

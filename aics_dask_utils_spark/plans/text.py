@@ -320,21 +320,8 @@ def text_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    t = T.tokens("text")
-    idx = F.sequence(F.lit(1), F.size(t) - 1)
-    bigrams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(t, i.cast("int")),
-                F.element_at(t, (i + 1).cast("int")),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        docs.select(F.explode(bigrams).alias("bigram"))
+        docs.select(F.explode(T.ngrams("text", 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "bigram")
@@ -989,7 +976,7 @@ def _hybrid_ann_kmeans_ctes() -> str:
 def search_hybrid_rrf_batch_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    from ..functions.vectors import as_double_array, vec_dot
+    from ..functions.vectors import as_double_array, vec_divide, vec_dot
     from ..operators.clustering import (
         kmeans_assign,
         kmeans_assign_topn,
@@ -1017,7 +1004,7 @@ def search_hybrid_rrf_batch_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assigned+normalized relation (same reason as ann_topk_multiprobe)
     unit = (
         kmeans_assign(e, cent)
-        .withColumn("u", F.transform("v", lambda x: x / nrm))
+        .withColumn("u", vec_divide("v", nrm))
         .select("vid", "cid", "u")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -113,18 +113,25 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q7_nation_volume",
+    # The nation-pair filter runs above a MATERIALIZED aggregate: it
+    # reads group keys only, so the rows are the same, but a plain WHERE
+    # lets DuckDB push `n1.n_name <> n2.n_name` into a customer x
+    # supplier join (1,440,519 rows at sf0.01, against 60,000 lineitem).
     oracle=f"""
-    SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-           EXTRACT(YEAR FROM l_shipdate) AS l_year,
-           {_DISC_PRICE} AS revenue
-    FROM lineitem
-      JOIN orders   ON l_orderkey  = o_orderkey
-      JOIN supplier ON l_suppkey   = s_suppkey
-      JOIN customer ON o_custkey   = c_custkey
-      JOIN nation n1 ON s_nationkey = n1.n_nationkey
-      JOIN nation n2 ON c_nationkey = n2.n_nationkey
-    WHERE n1.n_name <> n2.n_name
-    GROUP BY supp_nation, cust_nation, l_year
+    WITH vol AS MATERIALIZED (
+      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+             EXTRACT(YEAR FROM l_shipdate) AS l_year,
+             {_DISC_PRICE} AS revenue
+      FROM lineitem
+        JOIN orders   ON l_orderkey  = o_orderkey
+        JOIN supplier ON l_suppkey   = s_suppkey
+        JOIN customer ON o_custkey   = c_custkey
+        JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        JOIN nation n2 ON c_nationkey = n2.n_nationkey
+      GROUP BY supp_nation, cust_nation, l_year
+    )
+    SELECT * FROM vol
+    WHERE supp_nation <> cust_nation
     ORDER BY supp_nation, cust_nation, l_year
     """,
     doc="TPC-H Q7 shape: one dimension (nation) joined in two roles; both "

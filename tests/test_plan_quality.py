@@ -88,6 +88,25 @@ def test_minhash_lsh_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_minhash_lsh_one_doc_aggregate(spark, sf_dir):
+    # signatures and per-doc shingle-set sizes come from ONE doc_id
+    # aggregate over the hashed shingles; a second (sizes) aggregate
+    # costs a shuffle and a Spark job per LSH build
+    from aics_dask_utils_spark.operators.dedup import minhash_lsh_pairs
+    from aics_dask_utils_spark.sources import load_table
+
+    pairs = minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+    keys, stack = [], [pairs._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        p = stack.pop()
+        if p.getClass().getSimpleName() == "Aggregate":
+            keys.append(
+                [e.toString().split("#")[0] for e in _jseq(p.groupingExpressions())]
+            )
+        stack.extend(_jseq(p.children()))
+    assert keys.count(["doc_id"]) == 1, keys
+
+
 def test_decontaminate_broadcasts_eval_set(spark, sf_dir):
     # the eval-benchmark n-gram set must broadcast: the training-corpus
     # scan side of a 100 TB decontamination pass must never shuffle
@@ -1248,3 +1267,193 @@ def test_hybrid_rrf_alpha_col_plan_shape(spark, sf_dir):
             doc_scan_ids.add(m.group(1))
     assert len(doc_scan_ids) == 2, doc_scan_ids
     assert "BroadcastHashJoin" in plan
+
+
+# --- Array lambdas: no row-invariant work per element ------------------
+#
+# Spark evaluates a higher-order function's lambda per element,
+# interpreted, with no common-subexpression elimination. A subtree of a
+# lambda body that references no lambda variable is therefore re-run
+# for every element; when it tokenizes, matches a regexp, hashes or
+# folds an array, that is O(n²) per row. Such values are bound once per
+# row with ``functions.binding.let``. The lint walks the optimized
+# logical plan as the JVM expression tree (not its string), including
+# the cached plans of persisted relations, and the plans of every
+# DataFrame a plan collects, counts, checkpoints or writes while it is
+# built (CC-star and trainer collects, eager checkpoints, sinks).
+
+_LAMBDA_HEAVY = frozenset({
+    "StringSplit", "RLike", "RegExpReplace", "RegExpExtract",
+    "RegExpExtractAll", "RegExpCount", "RegExpSubStr", "RegExpInStr",
+    "Md5", "Sha1", "Sha2", "Crc32", "XxHash64", "Murmur3Hash", "HiveHash",
+})
+
+
+def _jseq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+class _LambdaLint:
+    """Collects every maximal subtree of a lambda body that is free of
+    lambda variables and contains a higher-order function, a string
+    split, a regexp or a hash."""
+
+    def __init__(self, jvm):
+        self._jvm = jvm
+        self._seen = set()
+        self.found = []
+
+    def plan(self, p):
+        key = self._jvm.System.identityHashCode(p)
+        if key in self._seen:
+            return
+        self._seen.add(key)
+        cls = p.getClass().getSimpleName()
+        if cls == "InMemoryRelation":
+            self.plan(p.cacheBuilder().cachedPlan())
+        elif cls == "InMemoryTableScanExec":
+            self.plan(p.relation())
+        elif cls == "AdaptiveSparkPlanExec":
+            self.plan(p.inputPlan())
+        for e in _jseq(p.expressions()):
+            self._expr(e, False)
+        for c in _jseq(p.children()):
+            self.plan(c)
+
+    def _expr(self, e, in_lambda):
+        """(free lambda-variable ids, heavy) of ``e``; reports the
+        closed heavy children of every open node inside a lambda."""
+        cls = e.getClass().getSimpleName()
+        if cls == "NamedLambdaVariable":
+            return {e.exprId().id()}, False
+        kids = _jseq(e.children())
+        if cls == "LambdaFunction":
+            body, args = kids[0], kids[1:]
+            free, heavy = self._expr(body, True)
+            self._report(body, free, heavy)
+            return free - {a.exprId().id() for a in args}, heavy
+        res = [self._expr(k, in_lambda) for k in kids]
+        free = set().union(*(f for f, _ in res))
+        heavy = (
+            cls in _LAMBDA_HEAVY
+            or any(k.getClass().getSimpleName() == "LambdaFunction" for k in kids)
+            or any(h for _, h in res)
+        )
+        if in_lambda and free:
+            for k, (kf, kh) in zip(kids, res):
+                self._report(k, kf, kh)
+        return free, heavy
+
+    def _report(self, e, free, heavy):
+        if heavy and not free:
+            self.found.append(e.toString())
+
+
+@pytest.fixture
+def executed_plans(monkeypatch):
+    """Optimized plans of every DataFrame collected, counted,
+    checkpointed or written while the fixture is live."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+
+    def _record(get_df, name, cls):
+        orig = getattr(cls, name)
+
+        def wrapped(self, *a, **kw):
+            plans.append(get_df(self)._jdf.queryExecution().optimizedPlan())
+            return orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, name, wrapped)
+
+    for name in ("collect", "count", "toPandas", "toLocalIterator",
+                 "localCheckpoint", "checkpoint"):
+        _record(lambda df: df, name, DataFrame)
+    for name in ("save", "parquet"):
+        _record(lambda w: w._df, name, DataFrameWriter)
+    return plans
+
+
+def _lambda_invariant_work(spark, df, executed=()):
+    lint = _LambdaLint(spark._jvm)
+    for p in [*executed, df._jdf.queryExecution().optimizedPlan()]:
+        lint.plan(p)
+    return lint.found
+
+
+def test_lambda_lint_catches_row_invariant_work(spark):
+    """Red-bar check for the walker: an inline tokenize inside the
+    lambda and a norm fold over the outer row (whose own lambda binds
+    only its own variables) are both flagged; the `let`-bound forms and
+    a nested fold over the lambda variable are not."""
+    from pyspark.sql import functions as F
+
+    from aics_dask_utils_spark.functions.binding import let
+
+    d = spark.createDataFrame([("a b c", [1.0, 2.0])], "text string, v array<double>")
+    toks = F.split("text", " ")
+    nrm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
+    idx = F.sequence(F.lit(1), F.lit(2))
+    bad = {
+        "split": F.transform(idx, lambda i: F.element_at(toks, i)),
+        "fold": F.transform("v", lambda x: x / nrm),
+    }
+    good = {
+        "split": let(toks, lambda t: F.transform(idx, lambda i: F.element_at(t, i))),
+        "fold": let(nrm, lambda n: F.transform("v", lambda x: x / n)),
+        "nested": F.transform(
+            F.array("v"),
+            lambda a: F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x),
+        ),
+    }
+    for name, col in bad.items():
+        assert _lambda_invariant_work(spark, d.select(col)), name
+    for name, col in good.items():
+        assert not _lambda_invariant_work(spark, d.select(col)), name
+
+
+def test_text_and_vector_helpers_bind_row_invariants(spark):
+    from pyspark.sql import functions as F
+
+    from aics_dask_utils_spark.functions.vectors import (
+        vec_divide,
+        vec_dot,
+        with_unit_vector,
+    )
+    from aics_dask_utils_spark.operators import text as T
+
+    d = spark.createDataFrame([("a b c d", [1.0, 2.0])], "text string, v array<double>")
+    frames = {
+        "shingles": d.select(T.shingles("text", 3)),
+        "ngrams": d.select(T.ngrams("text", 2)),
+        "with_unit_vector": with_unit_vector(d, "v", "u"),
+        "vec_divide": d.select(vec_divide("v", F.sqrt(vec_dot("v", "v")))),
+    }
+    for name, df in frames.items():
+        assert not _lambda_invariant_work(spark, df), name
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "pipeline_retention_materialize",
+        "text_decontaminate",
+        "text_span_dedup",
+        "text_top_bigrams",
+        "text_repetition",
+        "text_exact_substring_ranges",
+        "dedup_semantic_clusters",
+        "ann_topk_learned_ivf",
+        "ann_topk_multiprobe",
+        "search_hybrid_rrf_batch_ann",
+        "search_hybrid_rrf",
+        "pipeline_rag_index",
+        "multimodal_image_dedup",
+    ],
+)
+def test_plan_lambdas_bind_row_invariants(spark, sf_dir, executed_plans, name):
+    df = all_plans()[name].fn(spark, sf_dir)
+    found = _lambda_invariant_work(spark, df, executed_plans)
+    assert not found, found[:3]

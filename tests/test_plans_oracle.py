@@ -127,14 +127,17 @@ SF001_DIR = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
     not os.path.exists(os.path.join(SF001_DIR, "lineitem.parquet")),
     reason="needs the sf0.01 tables",
 )
-@pytest.mark.parametrize("name", ["graph_label_propagation", "graph_pagerank_nations"])
+@pytest.mark.parametrize(
+    "name", ["graph_label_propagation", "graph_pagerank_nations", "q7_nation_volume"]
+)
 def test_nation_graph_oracles_stay_linear_in_lineitem(tmp_path, name):
-    """The nation-graph oracles must never build an intermediate larger
-    than lineitem. With a plain (inlined) `edges` CTE, DuckDB pushes the
-    LPA oracle's `src <> dst` below the GROUP BY and nested-loop-joins
-    customer x supplier: 1,440,519 rows at sf0.01, ~144M per copy at
-    sf0.1 — enough to spill the disk full and get the test session's
-    JVM OOM-killed."""
+    """The oracles that join nation in two roles must never build an
+    intermediate larger than lineitem. With a plain (inlined) `edges`
+    CTE, DuckDB pushes the LPA oracle's `src <> dst` below the GROUP BY
+    and nested-loop-joins customer x supplier: 1,440,519 rows at sf0.01,
+    ~144M per copy at sf0.1 — enough to spill the disk full and get the
+    test session's JVM OOM-killed. Q7's `n1.n_name <> n2.n_name` took
+    the same path at sf0.01 until it moved above the aggregate."""
     con = duckdb_connection(SF001_DIR)
     try:
         n_lineitem = con.execute("SELECT COUNT(*) FROM lineitem").fetchone()[0]
