@@ -169,11 +169,13 @@ class SparkHandler:
         An explicit ``batch_size`` runs sequential per-slice jobs, each
         gathered to completion before the next (the reference's exact
         semantics) — use it only when you need completed-per-batch
-        checkpointing.
+        checkpointing. A ``batch_size`` below 1 raises ``ValueError``.
         """
         n = self._check_aligned(iterables)
         if batch_size is None:
             return self.gather(self.map(func, *iterables, **kwargs))
+        if batch_size < 1:
+            raise ValueError(f"batch_size must be >= 1; got {batch_size}")
         results: list[Any] = []
         for i in range(0, n, batch_size):
             sliced = [it[i : i + batch_size] for it in iterables]

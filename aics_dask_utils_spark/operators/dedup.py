@@ -213,6 +213,13 @@ def minhash_lsh_pairs(
     similarity s is 1-(1-s^r)^bands — at r=3,b=4: s=0.9 -> 0.99,
     s=0.3 -> 0.10. The candidate join shuffles only (band_id, hash)
     keys: linear in corpus size.
+
+    The hashed-shingle relation (doc_id, h1, h2) is persisted
+    ``MEMORY_AND_DISK``, once per call, and the persist outlives the
+    call: the returned pairs are lazy and still read it (signatures
+    and candidate verification). It is released by the session's
+    ``spark.catalog.clearCache()``, or by an unpersist once the
+    caller's own action (e.g. a collect of the pairs) has run.
     """
     if num_hashes % bands != 0:
         raise ValueError(

@@ -472,6 +472,96 @@ def _pq_adc_score(codes_col: str, codes_k: int):
     )
 
 
+def _unit_rows(
+    df: DataFrame, id_col: str, vec_col: str, key: str, unit: str
+) -> DataFrame:
+    """(key, unit): each row's id and unit-normalized vector — the
+    query prep of both ADC operators, and their corpus prep."""
+    return with_unit_vector(
+        df.select(F.col(id_col).alias(key), F.col(vec_col).alias("v0")),
+        "v0",
+        unit,
+    ).select(key, unit)
+
+
+def _adc_rank_refine(
+    scored_q: DataFrame,
+    e: DataFrame,
+    qe: DataFrame,
+    k: int,
+    refine: int | None,
+    truncate_shortlist: bool,
+) -> DataFrame:
+    """The shared tail of :func:`pq_topk` and :func:`ivfpq_topk`: rank
+    the ADC scores ``scored_q`` (q_id, vid, approx_cosine) per query;
+    with ``refine=None`` keep the top ``k`` approximate hits, otherwise
+    shortlist the top ``refine`` and re-rank them by exact cosine
+    between the corpus unit vectors ``e`` (vid, u) and the query unit
+    vectors ``qe`` (q_id, qu).
+
+    Per-query ranks are exact DISTRIBUTED grouped_row_numbers, not a
+    q_id-partitioned window: with a handful of queries ranking a whole
+    corpus each, the partitioned window is lint-clean but still funnels
+    |corpus| rows per query through one task. Values are identical
+    (same total order per query).
+    """
+    from .stats import grouped_row_numbers
+
+    pq_order = [F.desc("approx_cosine"), F.asc("vid")]
+    if refine is None:
+        return (
+            grouped_row_numbers(scored_q, ["q_id"], pq_order, out_col="rank")
+            .where(F.col("rank") <= k)
+            .select(
+                "q_id", F.col("vid").alias("neighbor_id"), "approx_cosine", "rank"
+            )
+        )
+    # Shortlist-then-refine (the FAISS IndexRefine pattern): ADC picks
+    # the top `refine` candidates per query in the compressed domain,
+    # then ONLY those shortlist rows fetch their raw unit vectors for
+    # an exact cosine re-rank to top k. At 100 TB the exact pass
+    # touches refine x |queries| vectors — thousands, not billions —
+    # so recall approaches exact while the scan stays compressed.
+    short = (
+        grouped_row_numbers(scored_q, ["q_id"], pq_order, out_col="arank")
+        .where(F.col("arank") <= refine)
+        .select("q_id", "vid")
+    )
+    if truncate_shortlist:
+        # Lazy localCheckpoint: the shortlist is refine × |queries|
+        # rows BY CONSTRUCTION (150 in the hybrids — tiny at any
+        # scale), but its lineage carries the whole compressed-domain
+        # scoring tree (broadcast codebooks, the m-way encode
+        # expression, the ADC rank machinery). Truncating here stops
+        # every downstream consumer from re-embedding that tree —
+        # measured 2.42M -> 0.57M plan chars / 2926 -> 686 Exchanges /
+        # 7.4 -> 6.1 s isolated on search_hybrid_rrf_batch_ivfpq,
+        # oracle-identical — so the deep HYBRID consumers (two more
+        # rank passes + the fuse above this shortlist) opt in. The
+        # standalone ANN plans leave it off: with only the exact
+        # re-rank downstream, the same boundary MEASURED ~0.6-1 s
+        # SLOWER (ann_topk_ivfpq isolated 2.4-4.1 -> 4.0-4.7 s) — the
+        # extra materialization job buys no construct savings there.
+        # Moving the cut from here to the hybrid's dense output was
+        # slower as well (search_hybrid_rrf_batch_ivfpq 6.5-7.4 ->
+        # 7.7-8.8 s at sf0.1, local[4]): the re-rank behind the cut
+        # loses AQE. AQE/stat loss at the shortlist is irrelevant for
+        # 150 rows.
+        short = short.localCheckpoint(eager=False)
+    ref = (
+        short.join(e, "vid")
+        .join(F.broadcast(qe), "q_id")
+        .select("q_id", "vid", vec_dot("u", "qu").alias("cosine"))
+    )
+    return (
+        grouped_row_numbers(
+            ref, ["q_id"], [F.desc("cosine"), F.asc("vid")], out_col="rank"
+        )
+        .where(F.col("rank") <= k)
+        .select("q_id", F.col("vid").alias("neighbor_id"), "cosine", "rank")
+    )
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -527,15 +617,7 @@ def pq_topk(
 
     from .clustering import spread_to_cores
 
-    e = spread_to_cores(
-        with_unit_vector(
-            corpus.select(
-                F.col(id_col).alias("vid"), F.col(vec_col).alias("v0")
-            ),
-            "v0",
-            "u",
-        ).select("vid", "u")
-    )
+    e = spread_to_cores(_unit_rows(corpus, id_col, vec_col, "vid", "u"))
     cb = _pq_fit(e, "u", m, d, codes_k, iters, train_limit)
     # The trained codebooks ride the plan as literals: the corpus
     # encode and the per-query LUT need no codebook relation and run
@@ -544,11 +626,7 @@ def pq_topk(
     enc = e.crossJoin(F.broadcast(cmap_rel)).select(
         "vid", _pq_encode_codes("u", m, d).alias("codes")
     )
-    qe = with_unit_vector(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("v0")),
-        "v0",
-        "qu",
-    ).select("q_id", "qu")
+    qe = _unit_rows(queries, id_col, vec_col, "q_id", "qu")
     dds_rel = _pq_query_luts(qe, cmap_rel, m, d, codes_k)
 
     scored_q = (
@@ -558,62 +636,7 @@ def pq_topk(
             "q_id", "vid", _pq_adc_score("codes", codes_k).alias("approx_cosine")
         )
     )
-    # Per-query ranks are exact DISTRIBUTED grouped_row_numbers, not a
-    # q_id-partitioned window: with a handful of queries ranking a
-    # whole corpus each, the partitioned window is lint-clean but
-    # still funnels |corpus| rows per query through one task. Values
-    # are identical (same total order per query).
-    from .stats import grouped_row_numbers
-
-    pq_order = [F.desc("approx_cosine"), F.asc("vid")]
-    if refine is None:
-        return (
-            grouped_row_numbers(scored_q, ["q_id"], pq_order, out_col="rank")
-            .where(F.col("rank") <= k)
-            .select(
-                "q_id", F.col("vid").alias("neighbor_id"), "approx_cosine", "rank"
-            )
-        )
-    # Shortlist-then-refine (the FAISS IndexRefine pattern): ADC picks
-    # the top `refine` candidates per query in the compressed domain,
-    # then ONLY those shortlist rows fetch their raw unit vectors for
-    # an exact cosine re-rank to top k. At 100 TB the exact pass
-    # touches refine x |queries| vectors — thousands, not billions —
-    # so recall approaches exact while the scan stays compressed.
-    short = (
-        grouped_row_numbers(scored_q, ["q_id"], pq_order, out_col="arank")
-        .where(F.col("arank") <= refine)
-        .select("q_id", "vid")
-    )
-    if truncate_shortlist:
-        # Lazy localCheckpoint (round 13, guide §3.3): the shortlist is
-        # refine × |queries| rows BY CONSTRUCTION (150 here — tiny at
-        # any scale), but its lineage carries the whole compressed-
-        # domain scoring tree (broadcast codebooks, the m-way encode
-        # expression, the ADC rank machinery). Truncating here stops
-        # every downstream consumer from re-embedding that tree —
-        # measured 2.42M -> 0.57M plan chars / 2926 -> 686 Exchanges /
-        # 7.4 -> 6.1 s isolated on search_hybrid_rrf_batch_ivfpq,
-        # oracle-identical — so the deep HYBRID consumers (two more
-        # rank passes + the fuse above this shortlist) opt in. The
-        # standalone ANN plans leave it off: with only the exact
-        # re-rank downstream, the same boundary MEASURED ~0.6-1 s
-        # SLOWER (ann_topk_ivfpq isolated 2.4-4.1 -> 4.0-4.7 s) — the
-        # extra materialization job buys no construct savings there.
-        # AQE/stat loss at the LogicalRDD is irrelevant for 150 rows.
-        short = short.localCheckpoint(eager=False)
-    ref = (
-        short.join(e, "vid")
-        .join(F.broadcast(qe), "q_id")
-        .select("q_id", "vid", vec_dot("u", "qu").alias("cosine"))
-    )
-    return (
-        grouped_row_numbers(
-            ref, ["q_id"], [F.desc("cosine"), F.asc("vid")], out_col="rank"
-        )
-        .where(F.col("rank") <= k)
-        .select("q_id", F.col("vid").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _adc_rank_refine(scored_q, e, qe, k, refine, truncate_shortlist)
 
 
 def _ivfpq_fit(
@@ -728,13 +751,8 @@ def ivfpq_topk(
         raise ValueError(f"dim {n_dims} not divisible by m={m}")
     d = n_dims // m
     from .clustering import _own_centroid, kmeans_assign_topn
-    from .stats import grouped_row_numbers
 
-    e = with_unit_vector(
-        corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v0")),
-        "v0",
-        "u",
-    ).select("vid", "u")
+    e = _unit_rows(corpus, id_col, vec_col, "vid", "u")
     cent, cb, res = _ivfpq_fit(
         e, k_coarse, coarse_iters, m, d, codes_k, iters, train_limit
     )
@@ -743,11 +761,7 @@ def ivfpq_topk(
     enc = res.crossJoin(F.broadcast(cmap_rel)).select(
         "vid", "cell", _pq_encode_codes("r", m, d).alias("codes")
     )
-    qe = with_unit_vector(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("v0")),
-        "v0",
-        "qu",
-    ).select("q_id", "qu")
+    qe = _unit_rows(queries, id_col, vec_col, "q_id", "qu")
     dds_rel = _pq_query_luts(qe, cmap_rel, m, d, codes_k)
     probes = kmeans_assign_topn(
         qe.select(F.col("q_id").alias("vid"), F.col("qu").alias("v")),
@@ -777,49 +791,7 @@ def ivfpq_topk(
             ),
         )
     )
-    pq_order = [F.desc("approx_cosine"), F.asc("vid")]
-    if refine is None:
-        return (
-            grouped_row_numbers(scored_q, ["q_id"], pq_order, out_col="rank")
-            .where(F.col("rank") <= k)
-            .select(
-                "q_id", F.col("vid").alias("neighbor_id"), "approx_cosine", "rank"
-            )
-        )
-    short = (
-        grouped_row_numbers(scored_q, ["q_id"], pq_order, out_col="arank")
-        .where(F.col("arank") <= refine)
-        .select("q_id", "vid")
-    )
-    if truncate_shortlist:
-        # Lazy localCheckpoint (round 13, guide §3.3): the shortlist is
-        # refine × |queries| rows BY CONSTRUCTION (150 here — tiny at
-        # any scale), but its lineage carries the whole compressed-
-        # domain scoring tree (broadcast codebooks, the m-way encode
-        # expression, the ADC rank machinery). Truncating here stops
-        # every downstream consumer from re-embedding that tree —
-        # measured 2.42M -> 0.57M plan chars / 2926 -> 686 Exchanges /
-        # 7.4 -> 6.1 s isolated on search_hybrid_rrf_batch_ivfpq,
-        # oracle-identical — so the deep HYBRID consumers (two more
-        # rank passes + the fuse above this shortlist) opt in. The
-        # standalone ANN plans leave it off: with only the exact
-        # re-rank downstream, the same boundary MEASURED ~0.6-1 s
-        # SLOWER (ann_topk_ivfpq isolated 2.4-4.1 -> 4.0-4.7 s) — the
-        # extra materialization job buys no construct savings there.
-        # AQE/stat loss at the LogicalRDD is irrelevant for 150 rows.
-        short = short.localCheckpoint(eager=False)
-    ref = (
-        short.join(e, "vid")
-        .join(F.broadcast(qe), "q_id")
-        .select("q_id", "vid", vec_dot("u", "qu").alias("cosine"))
-    )
-    return (
-        grouped_row_numbers(
-            ref, ["q_id"], [F.desc("cosine"), F.asc("vid")], out_col="rank"
-        )
-        .where(F.col("rank") <= k)
-        .select("q_id", F.col("vid").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _adc_rank_refine(scored_q, e, qe, k, refine, truncate_shortlist)
 
 
 def semantic_screen(

@@ -201,6 +201,70 @@ def tf_idf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> D
     )
 
 
+def _bm25_weights(
+    docs: DataFrame,
+    terms: list[str],
+    id_col: str,
+    text_col: str,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """The shared BM25 core: one row per (document, matching term) with
+    its 6-dp-rounded Okapi weight ``w`` (and doc_id, dl, term).
+
+    Scale shape: the token explode is filtered to ``terms`` BEFORE the
+    (doc, term) aggregation, so the shuffle carries only matching
+    postings — |matches|, not |tokens|. Corpus stats (N, total length)
+    and per-term document frequencies are tiny aggregates broadcast
+    back onto the postings.
+
+    The postings relation is persisted ``MEMORY_AND_DISK`` (dfreq and
+    the weighted join both consume it; without this the scan +
+    tokenize + explode runs twice; it is |matches|-sized, the cheapest
+    cache point). The persist outlives the call: the returned relation
+    is lazy and still reads it, so it stays cached until the session's
+    ``spark.catalog.clearCache()``, or until the caller unpersists the
+    postings after its own action.
+    """
+    from pyspark import StorageLevel
+
+    toks = tokens(text_col)
+    bag = F.array(*[F.lit(t) for t in terms])
+    # Small corpora arrive as one parquet split; the tokenize/explode
+    # fan-out is not small — spread it to cluster parallelism (free at
+    # real scale, where the scan is already thousands of splits).
+    docs = docs.repartition(
+        docs.sparkSession.sparkContext.defaultParallelism, id_col
+    )
+    base = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.size(toks).alias("dl"),
+        F.explode(F.filter(toks, lambda t: F.array_contains(bag, t))).alias("term"),
+    )
+    stats = docs.select(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.size(toks)).alias("total_dl"),
+    )
+    tf = (
+        base.groupBy("doc_id", "dl", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    avgdl = F.col("total_dl").cast("double") / F.col("n_docs")
+    idf = F.log(
+        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    norm_tf = (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + k1 * (1.0 - b + b * F.col("dl").cast("double") / avgdl)
+    )
+    return (
+        tf.join(F.broadcast(dfreq), "term")
+        .crossJoin(F.broadcast(stats))
+        .withColumn("w", F.round(idf * norm_tf, 6))
+    )
+
+
 def bm25_scores(
     docs: DataFrame,
     query_terms: list[str],
@@ -215,11 +279,8 @@ def bm25_scores(
 
     Returns (doc_id, dl, bm25) for documents matching >= 1 query term.
 
-    Scale shape: the token explode is filtered to query terms BEFORE
-    the (doc, term) aggregation, so the shuffle carries only matching
-    postings — |matches|, not |tokens|. Corpus stats (N, total length)
-    and per-term document frequencies are tiny aggregates broadcast
-    back onto the postings. Per-term weights are rounded to 6 dp and
+    Per-term weights come from the shared core :func:`_bm25_weights`
+    (which also documents the persist it leaves behind); they are
     summed in exact decimal, so scores hash-match any engine running
     the same arithmetic.
     """
@@ -227,46 +288,7 @@ def bm25_scores(
 
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    toks = tokens(text_col)
-    q = F.array(*[F.lit(t) for t in query_terms])
-    # Small corpora arrive as one parquet split; the tokenize/explode
-    # fan-out is not small — spread it to cluster parallelism (free at
-    # real scale, where the scan is already thousands of splits).
-    docs = docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, id_col
-    )
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(toks).alias("dl"),
-        F.explode(F.filter(toks, lambda t: F.array_contains(q, t))).alias("term"),
-    )
-    stats = docs.select(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(toks)).alias("total_dl"),
-    )
-    from pyspark import StorageLevel
-
-    # persisted: dfreq and the weighted join both consume it; without
-    # this the match-postings build (scan + tokenize + explode) runs
-    # twice. The relation is |matches|-sized, the cheapest cache point.
-    tf = (
-        base.groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("total_dl").cast("double") / F.col("n_docs")
-    idf = F.log(
-        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    norm_tf = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl").cast("double") / avgdl)
-    )
-    weighted = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("w", F.round(idf * norm_tf, 6))
-    )
+    weighted = _bm25_weights(docs, query_terms, id_col, text_col, k1, b)
     return weighted.groupBy("doc_id", "dl").agg(dsum("w").alias("bm25"))
 
 
@@ -279,23 +301,21 @@ def bm25_scores_multi(
     b: float = 0.75,
 ) -> DataFrame:
     """Okapi BM25 for a BATCH of bag-of-terms queries in ONE corpus scan
-    (the query-relation generalization of :func:`bm25_scores`, which is
-    this with the single query's bag folded straight into the term
-    filter).
+    (the query-relation generalization of :func:`bm25_scores`).
 
     Returns (q_id, doc_id, dl, bm25) for every (query, document) pair
     sharing >= 1 term. Same arithmetic as the single-query variant
-    (Lucene idf, 6-dp-rounded per-term weights, exact-decimal sum), so
+    (the shared core :func:`_bm25_weights`, exact-decimal sum), so
     running query q alone or in a batch gives identical scores — df and
     corpus stats are query-independent.
 
-    Scale shape: the token explode is filtered to the UNION of all
-    query bags before the (doc, term) aggregation, so the corpus is
-    scanned once however many queries ride the batch; the per-term
-    postings then join the broadcast (q_id, term) relation — query-
-    dimension-sized, scale-independent of the corpus — and collapse to
-    per-(q_id, doc) scores with map-side partials. Adding a query adds
-    rows to a broadcast relation, never a corpus scan.
+    Scale shape: the core's token filter is the UNION of all query
+    bags, so the corpus is scanned once however many queries ride the
+    batch; the per-term weights then join the broadcast (q_id, term)
+    relation — query-dimension-sized, scale-independent of the corpus —
+    and collapse to per-(q_id, doc) scores with map-side partials.
+    Adding a query adds rows to a broadcast relation, never a corpus
+    scan.
     """
     from ..functions.deterministic import dsum
 
@@ -304,51 +324,15 @@ def bm25_scores_multi(
     if any(not terms for terms in queries.values()):
         raise ValueError("every query bag must be non-empty")
     all_terms = sorted({t for terms in queries.values() for t in terms})
-    toks = tokens(text_col)
-    union_bag = F.array(*[F.lit(t) for t in all_terms])
-    docs = docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism, id_col
-    )
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(toks).alias("dl"),
-        F.explode(
-            F.filter(toks, lambda t: F.array_contains(union_bag, t))
-        ).alias("term"),
-    )
-    stats = docs.select(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(toks)).alias("total_dl"),
-    )
-    from pyspark import StorageLevel
-
-    # persisted for the same reason as the single-query variant: dfreq
-    # and the weighted join both consume the |matches|-sized postings.
-    tf = (
-        base.groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    avgdl = F.col("total_dl").cast("double") / F.col("n_docs")
-    idf = F.log(
-        1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    norm_tf = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl").cast("double") / avgdl)
-    )
+    weighted = _bm25_weights(docs, all_terms, id_col, text_col, k1, b)
     qrel = docs.sparkSession.createDataFrame(
         [(int(q), t) for q, terms in sorted(queries.items()) for t in terms],
         "q_id int, term string",
     )
-    weighted = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("w", F.round(idf * norm_tf, 6))
-        .join(F.broadcast(qrel), "term")
-    )
-    return weighted.groupBy("q_id", "doc_id", "dl").agg(
-        dsum("w").alias("bm25")
+    return (
+        weighted.join(F.broadcast(qrel), "term")
+        .groupBy("q_id", "doc_id", "dl")
+        .agg(dsum("w").alias("bm25"))
     )
 
 

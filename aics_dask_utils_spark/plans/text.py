@@ -8,7 +8,7 @@ are products/logs of identical doubles rounded to 6dp on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -696,13 +696,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vec_id").alias("doc_id"), "r_vec")
 
     fused = lex.join(vec, "doc_id", "full").select(
-        "doc_id",
-        "r_lex",
-        "r_vec",
-        (
-            F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-            + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0))
-        ).alias("rrf"),
+        "doc_id", "r_lex", "r_vec", (_rrf("r_lex") + _rrf("r_vec")).alias("rrf")
     )
     return (
         fused.select("doc_id", "r_lex", "r_vec", F.round("rrf", 6).alias("rrf"))
@@ -725,616 +719,10 @@ _RRF_QTERMS_SQL = ",".join(
     f"({q},'{t}')" for q, ts in sorted(_RRF_QUERIES.items()) for t in ts
 )
 
-
-@register(
-    "search_hybrid_rrf_batch",
-    oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-      FROM documents
-    ),
-    stats AS (SELECT COUNT(*) AS n_docs, SUM(len(t)) AS total_dl FROM toks),
-    qterms(q_id, term) AS (VALUES {_RRF_QTERMS_SQL}),
-    base AS (
-      SELECT doc_id, len(t) AS dl,
-             unnest(list_filter(t, x -> list_contains([{_RRF_ALL_TERMS_SQL}], x))) AS term
-      FROM toks
-    ),
-    tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base GROUP BY doc_id, dl, term),
-    dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-    w AS (
-      SELECT doc_id, term,
-             ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                   * (tf * (1.2 + 1.0))
-                   / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl::DOUBLE
-                                  / (total_dl::DOUBLE / n_docs))), 6) AS w
-      FROM tf JOIN dfreq USING (term) CROSS JOIN stats
-    ),
-    bm AS (
-      SELECT q.q_id, w.doc_id,
-             CAST(SUM(CAST(w AS DECIMAL(30,6))) AS DOUBLE) AS bm25
-      FROM w JOIN qterms q USING (term) GROUP BY q.q_id, w.doc_id
-    ),
-    lex AS (
-      SELECT q_id, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY bm25 DESC, doc_id) AS r_lex
-      FROM bm
-    ),
-    raw AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    e AS (
-      SELECT vec_id,
-             list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-      FROM raw
-    ),
-    qv AS (
-      SELECT CAST(vec_id AS INTEGER) AS q_id, u AS qu
-      FROM e WHERE vec_id < 3
-    ),
-    vec AS (
-      SELECT q_id, vec_id AS doc_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY q_id
-               ORDER BY list_dot_product(u, qu) DESC, vec_id) AS r_vec
-      FROM e CROSS JOIN qv
-    ),
-    fused AS (
-      SELECT COALESCE(l.q_id, v.q_id) AS q_id,
-             COALESCE(l.doc_id, v.doc_id) AS doc_id,
-             l.r_lex, v.r_vec,
-             COALESCE(1.0 / (60 + l.r_lex), 0)
-               + COALESCE(1.0 / (60 + v.r_vec), 0) AS rrf
-      FROM lex l FULL OUTER JOIN vec v
-        ON l.q_id = v.q_id AND l.doc_id = v.doc_id
-    ),
-    topr AS (
-      SELECT q_id, doc_id, r_lex, r_vec, rrf,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY rrf DESC, doc_id) AS rk
-      FROM fused
-    )
-    SELECT q_id, doc_id, r_lex, r_vec, ROUND(rrf, 6) AS rrf
-    FROM topr WHERE rk <= 5 ORDER BY q_id, doc_id
-    """,
-    doc="BATCHED hybrid retrieval with Reciprocal Rank Fusion (the "
-    "query-relation generalization of search_hybrid_rrf): three "
-    "queries — each a BM25 term bag paired with a dense query "
-    "embedding (vec_id 0/1/2) — fused per query by rrf = sum "
-    "1/(60+rank), top-5 per query. ONE corpus scan scores all "
-    "lexical bags (operators/text.py:bm25_scores_multi — postings "
-    "join a broadcast query-dimension (q_id, term) relation); every "
-    "per-query ranking is an EXACT DISTRIBUTED rank via "
-    "operators/stats.py:grouped_row_numbers (one global_row_numbers "
-    "pass over the (q_id, score) composite order + a |queries|-sized "
-    "offset join) — NEVER a q_id-partitioned window, which is "
-    "lint-clean but still funnels |corpus| rows per query through "
-    "one task. A doc missing from a query's lexical list contributes "
-    "only its vector rank (full outer join + coalesce). At 100 TB the "
-    "dense side ranks ANN candidates (ann_topk_ivf) per query; the "
-    "fusion and rank machinery are unchanged (EXT, retrieval)",
-    tags=("text", "similarity", "pipeline"),
-)
-def search_hybrid_rrf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import vec_dot, with_unit_vector
-    from ..operators.stats import grouped_row_numbers
-
-    docs = load_table(spark, sf_dir, "documents")
-    bm = T.bm25_scores_multi(docs, _RRF_QUERIES)
-    lex = grouped_row_numbers(
-        bm, ["q_id"], [F.desc("bm25"), F.asc("doc_id")], out_col="r_lex"
-    ).select("q_id", "doc_id", "r_lex")
-
-    emb = with_unit_vector(
-        load_table(spark, sf_dir, "embeddings"), "embedding", "__u"
-    )
-    qv = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").cast("int").alias("q_id"), F.col("__u").alias("__qu")
-    )
-    scored = emb.crossJoin(F.broadcast(qv)).withColumn(
-        "cosine", vec_dot("__u", "__qu")
-    )
-    vec = grouped_row_numbers(
-        scored, ["q_id"], [F.desc("cosine"), F.asc("vec_id")], out_col="r_vec"
-    ).select("q_id", F.col("vec_id").alias("doc_id"), "r_vec")
-
-    fused = lex.join(vec, ["q_id", "doc_id"], "full").withColumn(
-        "rrf",
-        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0)),
-    )
-    top = grouped_row_numbers(
-        fused, ["q_id"], [F.desc("rrf"), F.asc("doc_id")], out_col="__rk"
-    )
-    return (
-        top.where(F.col("__rk") <= 5)
-        .select(
-            "q_id", "doc_id", "r_lex", "r_vec", F.round("rrf", 6).alias("rrf")
-        )
-        .orderBy("q_id", "doc_id")
-    )
-
-
-def _hybrid_ann_kmeans_ctes() -> str:
-    """Trained-quantizer CTEs for the batch-ANN hybrid oracle — the
-    attested k-means chain (plans/clustering.py:_kmeans_ctes), with
-    the bounded vid<512 training sample the serving plans use."""
-    from .clustering import _TRAIN_N, _kmeans_ctes
-
-    return _kmeans_ctes(k=4, iters=2, final_assign=True, train_n=_TRAIN_N)
-
-
-@register(
-    "search_hybrid_rrf_batch_ann",
-    oracle=rf"""
-    WITH {{kmeans}},
-    toks AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-      FROM documents
-    ),
-    stats AS (SELECT COUNT(*) AS n_docs, SUM(len(t)) AS total_dl FROM toks),
-    qterms(q_id, term) AS (VALUES {{qterms}}),
-    base AS (
-      SELECT doc_id, len(t) AS dl,
-             unnest(list_filter(t, x -> list_contains([{{all_terms}}], x))) AS term
-      FROM toks
-    ),
-    tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base GROUP BY doc_id, dl, term),
-    dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-    w AS (
-      SELECT doc_id, term,
-             ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                   * (tf * (1.2 + 1.0))
-                   / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl::DOUBLE
-                                  / (total_dl::DOUBLE / n_docs))), 6) AS w
-      FROM tf JOIN dfreq USING (term) CROSS JOIN stats
-    ),
-    bm AS (
-      SELECT q.q_id, w.doc_id,
-             CAST(SUM(CAST(w AS DECIMAL(30,6))) AS DOUBLE) AS bm25
-      FROM w JOIN qterms q USING (term) GROUP BY q.q_id, w.doc_id
-    ),
-    lex AS (
-      SELECT q_id, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY bm25 DESC, doc_id) AS r_lex
-      FROM bm
-    ),
-    u AS (
-      SELECT vid, cid,
-             list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-      FROM a3
-    ),
-    qprobe AS (
-      SELECT CAST(vid AS INTEGER) AS q_id, cid AS cell FROM (
-        SELECT vid, cid,
-               ROW_NUMBER() OVER (PARTITION BY vid ORDER BY dist2, cid) AS rn
-        FROM s3
-      ) WHERE rn <= 2 AND vid < 3
-    ),
-    qv AS (
-      SELECT CAST(vid AS INTEGER) AS q_id, u AS qu
-      FROM u WHERE vid < 3
-    ),
-    cand AS (
-      SELECT p.q_id, c.vid AS doc_id, list_dot_product(q.qu, c.u) AS cosine
-      FROM qprobe p
-      JOIN u c ON c.cid = p.cell
-      JOIN qv q ON q.q_id = p.q_id
-    ),
-    vec AS (
-      SELECT q_id, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY cosine DESC, doc_id) AS r_vec
-      FROM cand
-    ),
-    fused AS (
-      SELECT COALESCE(l.q_id, v.q_id) AS q_id,
-             COALESCE(l.doc_id, v.doc_id) AS doc_id,
-             l.r_lex, v.r_vec,
-             COALESCE(1.0 / (60 + l.r_lex), 0)
-               + COALESCE(1.0 / (60 + v.r_vec), 0) AS rrf
-      FROM lex l FULL OUTER JOIN vec v
-        ON l.q_id = v.q_id AND l.doc_id = v.doc_id
-    ),
-    topr AS (
-      SELECT q_id, doc_id, r_lex, r_vec, rrf,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY rrf DESC, doc_id) AS rk
-      FROM fused
-    )
-    SELECT q_id, doc_id, r_lex, r_vec, ROUND(rrf, 6) AS rrf
-    FROM topr WHERE rk <= 5 ORDER BY q_id, doc_id
-    """.format(
-        kmeans=_hybrid_ann_kmeans_ctes(),
-        qterms=_RRF_QTERMS_SQL,
-        all_terms=_RRF_ALL_TERMS_SQL,
-    ),
-    doc="batched hybrid RRF with an ANN DENSE SIDE (the end-to-end "
-    "100 TB shape search_hybrid_rrf_batch documents): the same three "
-    "(BM25 bag, dense query embedding) queries, but each query's "
-    "vector ranking covers only its IVF CANDIDATE SET — the corpus "
-    "vectors whose trained-quantizer cell (k=4, 2 Lloyd rounds, the "
-    "attested kmeans_centroids chain) is among the query's TWO "
-    "nearest cells (kmeans_assign_topn multiprobe, the attested "
-    "ann_topk_multiprobe machinery) — instead of the full corpus. "
-    "Docs outside the probed cells contribute only their lexical "
-    "rank (full outer join + coalesce), exactly how a production "
-    "retrieval stack degrades: ANN recall loss shifts fused ranks, "
-    "it never drops lexical hits. Scale shape: ONE corpus text scan "
-    "for all BM25 bags (bm25_scores_multi), ONE corpus embedding "
-    "scan for assignment; candidates = cell-equi-join against a "
-    "broadcast query-dimension probe relation; every ranking is an "
-    "exact distributed grouped_row_numbers rank over the (bounded) "
-    "candidate relation — never a q_id-partitioned corpus window. "
-    "Dense-side recall vs the exact full-corpus ranking is pinned in "
-    "tests/test_ann_recall.py (EXT, retrieval)",
-    tags=("text", "similarity", "pipeline", "iterative"),
-)
-def search_hybrid_rrf_batch_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    from ..functions.vectors import as_double_array, vec_divide, vec_dot
-    from ..operators.clustering import (
-        kmeans_assign,
-        kmeans_assign_topn,
-        kmeans_centroids,
-    )
-    from ..operators.stats import grouped_row_numbers
-
-    docs = load_table(spark, sf_dir, "documents")
-    bm = T.bm25_scores_multi(docs, _RRF_QUERIES)
-    lex = grouped_row_numbers(
-        bm, ["q_id"], [F.desc("bm25"), F.asc("doc_id")], out_col="r_lex"
-    ).select("q_id", "doc_id", "r_lex")
-
-    from .clustering import _TRAIN_N
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        F.col("vec_id").alias("vid"), as_double_array("embedding").alias("v")
-    )
-    cent = kmeans_centroids(
-        emb, "vec_id", "embedding", k=4, iters=2, train_limit=_TRAIN_N
-    )
-    nrm = F.sqrt(vec_dot("v", "v"))
-    # persisted: the query side and the corpus side both consume the
-    # assigned+normalized relation (same reason as ann_topk_multiprobe)
-    unit = (
-        kmeans_assign(e, cent)
-        .withColumn("u", vec_divide("v", nrm))
-        .select("vid", "cid", "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    probes = kmeans_assign_topn(e.where(F.col("vid") < 3), cent, n=2).select(
-        F.col("vid").cast("int").alias("q_id"), F.col("cid").alias("cell")
-    )
-    qv = unit.where(F.col("vid") < 3).select(
-        F.col("vid").cast("int").alias("q_id"), F.col("u").alias("qu")
-    )
-    cand = (
-        unit.select(
-            F.col("vid").alias("doc_id"),
-            F.col("cid").alias("cell"),
-            F.col("u").alias("cu"),
-        )
-        .join(F.broadcast(probes), "cell")
-        .join(F.broadcast(qv), "q_id")
-        .withColumn("cosine", vec_dot("qu", "cu"))
-    )
-    vec = grouped_row_numbers(
-        cand, ["q_id"], [F.desc("cosine"), F.asc("doc_id")], out_col="r_vec"
-    ).select("q_id", "doc_id", "r_vec")
-
-    fused = lex.join(vec, ["q_id", "doc_id"], "full").withColumn(
-        "rrf",
-        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0)),
-    )
-    top = grouped_row_numbers(
-        fused, ["q_id"], [F.desc("rrf"), F.asc("doc_id")], out_col="__rk"
-    )
-    return (
-        top.where(F.col("__rk") <= 5)
-        .select(
-            "q_id", "doc_id", "r_lex", "r_vec", F.round("rrf", 6).alias("rrf")
-        )
-        .orderBy("q_id", "doc_id")
-    )
-
-
-#: Lexical weight for the alpha-weighted RRF plan. PLUGGABLE: a
-#: production stack tunes this per corpus/eval set; 0.7 expresses a
-#: lexical-leaning deployment (e.g. code or exact-entity search).
-_RRF_ALPHA = 0.7
-
-
-@register(
-    "search_hybrid_rrf_weighted",
-    oracle=rf"""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-      FROM documents
-    ),
-    stats AS (SELECT COUNT(*) AS n_docs, SUM(len(t)) AS total_dl FROM toks),
-    qterms(q_id, term) AS (VALUES {_RRF_QTERMS_SQL}),
-    base AS (
-      SELECT doc_id, len(t) AS dl,
-             unnest(list_filter(t, x -> list_contains([{_RRF_ALL_TERMS_SQL}], x))) AS term
-      FROM toks
-    ),
-    tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base GROUP BY doc_id, dl, term),
-    dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-    w AS (
-      SELECT doc_id, term,
-             ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                   * (tf * (1.2 + 1.0))
-                   / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl::DOUBLE
-                                  / (total_dl::DOUBLE / n_docs))), 6) AS w
-      FROM tf JOIN dfreq USING (term) CROSS JOIN stats
-    ),
-    bm AS (
-      SELECT q.q_id, w.doc_id,
-             CAST(SUM(CAST(w AS DECIMAL(30,6))) AS DOUBLE) AS bm25
-      FROM w JOIN qterms q USING (term) GROUP BY q.q_id, w.doc_id
-    ),
-    lex AS (
-      SELECT q_id, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY bm25 DESC, doc_id) AS r_lex
-      FROM bm
-    ),
-    raw AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    e AS (
-      SELECT vec_id,
-             list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-      FROM raw
-    ),
-    qv AS (
-      SELECT CAST(vec_id AS INTEGER) AS q_id, u AS qu
-      FROM e WHERE vec_id < 3
-    ),
-    vec AS (
-      SELECT q_id, vec_id AS doc_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY q_id
-               ORDER BY list_dot_product(u, qu) DESC, vec_id) AS r_vec
-      FROM e CROSS JOIN qv
-    ),
-    fused AS (
-      SELECT COALESCE(l.q_id, v.q_id) AS q_id,
-             COALESCE(l.doc_id, v.doc_id) AS doc_id,
-             l.r_lex, v.r_vec,
-             CAST({_RRF_ALPHA} AS DOUBLE) * COALESCE(1.0 / (60 + l.r_lex), 0)
-               + CAST({1.0 - _RRF_ALPHA} AS DOUBLE)
-                 * COALESCE(1.0 / (60 + v.r_vec), 0)
-               AS rrf
-      FROM lex l FULL OUTER JOIN vec v
-        ON l.q_id = v.q_id AND l.doc_id = v.doc_id
-    ),
-    topr AS (
-      SELECT q_id, doc_id, r_lex, r_vec, rrf,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY rrf DESC, doc_id) AS rk
-      FROM fused
-    )
-    SELECT q_id, doc_id, r_lex, r_vec, ROUND(rrf, 6) AS rrf
-    FROM topr WHERE rk <= 5 ORDER BY q_id, doc_id
-    """,
-    doc="ALPHA-WEIGHTED batched hybrid RRF (the tuning knob production "
-    "hybrid search exposes; r10-verdict queue item): rrf = "
-    "alpha/(60+r_lex) + (1-alpha)/(60+r_vec) with alpha = 0.7 — a "
-    "lexical-leaning fusion for exact-entity-heavy corpora; alpha is "
-    "the pluggable policy constant and is mirrored literally into the "
-    "oracle. Identical scan shape to search_hybrid_rrf_batch (one "
-    "corpus text scan for all BM25 bags via bm25_scores_multi, one "
-    "embedding scan, every per-query ranking an exact distributed "
-    "grouped_row_numbers rank, full outer fuse so a doc missing from "
-    "one ranking still scores); the weight multiplies integer-rank "
-    "reciprocals, so the doubles stay bit-identical cross-engine "
-    "before the 6-dp presentation rounding (EXT, retrieval)",
-    tags=("text", "similarity", "pipeline"),
-)
-def search_hybrid_rrf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import vec_dot, with_unit_vector
-    from ..operators.stats import grouped_row_numbers
-
-    docs = load_table(spark, sf_dir, "documents")
-    bm = T.bm25_scores_multi(docs, _RRF_QUERIES)
-    lex = grouped_row_numbers(
-        bm, ["q_id"], [F.desc("bm25"), F.asc("doc_id")], out_col="r_lex"
-    ).select("q_id", "doc_id", "r_lex")
-
-    emb = with_unit_vector(
-        load_table(spark, sf_dir, "embeddings"), "embedding", "__u"
-    )
-    qv = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").cast("int").alias("q_id"), F.col("__u").alias("__qu")
-    )
-    scored = emb.crossJoin(F.broadcast(qv)).withColumn(
-        "cosine", vec_dot("__u", "__qu")
-    )
-    vec = grouped_row_numbers(
-        scored, ["q_id"], [F.desc("cosine"), F.asc("vec_id")], out_col="r_vec"
-    ).select("q_id", F.col("vec_id").alias("doc_id"), "r_vec")
-
-    fused = lex.join(vec, ["q_id", "doc_id"], "full").withColumn(
-        "rrf",
-        F.lit(_RRF_ALPHA)
-        * F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-        + F.lit(1.0 - _RRF_ALPHA)
-        * F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0)),
-    )
-    top = grouped_row_numbers(
-        fused, ["q_id"], [F.desc("rrf"), F.asc("doc_id")], out_col="__rk"
-    )
-    return (
-        top.where(F.col("__rk") <= 5)
-        .select(
-            "q_id", "doc_id", "r_lex", "r_vec", F.round("rrf", 6).alias("rrf")
-        )
-        .orderBy("q_id", "doc_id")
-    )
-
-
-def _hybrid_pq_ctes() -> str:
-    """Trained product-quantizer CTEs for the batch-PQ hybrid oracle —
-    the attested PQ chain (plans/clustering.py:_pq_ctes) at the same
-    hyper-parameters as ann_topk_pq_refine (incl. the bounded vid<512
-    training sample), with the three hybrid query embeddings as the
-    query relation."""
-    from .clustering import _TRAIN_N, _pq_ctes
-
-    return _pq_ctes(m=16, d=4, k=16, iters=2, n_q=3, train_n=_TRAIN_N)
-
-
-@register(
-    "search_hybrid_rrf_batch_pq",
-    oracle=rf"""
-    WITH {{pq}},
-    toks AS (
-      SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-      FROM documents
-    ),
-    stats AS (SELECT COUNT(*) AS n_docs, SUM(len(t)) AS total_dl FROM toks),
-    qterms(q_id, term) AS (VALUES {{qterms}}),
-    base AS (
-      SELECT doc_id, len(t) AS dl,
-             unnest(list_filter(t, x -> list_contains([{{all_terms}}], x))) AS term
-      FROM toks
-    ),
-    tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base GROUP BY doc_id, dl, term),
-    dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-    w AS (
-      SELECT doc_id, term,
-             ROUND(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                   * (tf * (1.2 + 1.0))
-                   / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl::DOUBLE
-                                  / (total_dl::DOUBLE / n_docs))), 6) AS w
-      FROM tf JOIN dfreq USING (term) CROSS JOIN stats
-    ),
-    bm AS (
-      SELECT q.q_id, w.doc_id,
-             CAST(SUM(CAST(w AS DECIMAL(30,6))) AS DOUBLE) AS bm25
-      FROM w JOIN qterms q USING (term) GROUP BY q.q_id, w.doc_id
-    ),
-    lex AS (
-      SELECT q_id, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY bm25 DESC, doc_id) AS r_lex
-      FROM bm
-    ),
-    short AS (
-      SELECT q_id, vid FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                    ORDER BY approx_cosine DESC, vid) AS arank
-        FROM scored
-      ) WHERE arank <= 50
-    ),
-    ref AS (
-      SELECT s.q_id, s.vid, list_dot_product(cu.u, qu.u) AS cosine
-      FROM short s
-      JOIN uu cu ON cu.vid = s.vid
-      JOIN uu qu ON qu.vid = s.q_id
-    ),
-    vec AS (
-      SELECT CAST(q_id AS INTEGER) AS q_id, vid AS doc_id,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY cosine DESC, vid) AS r_vec
-      FROM ref
-    ),
-    fused AS (
-      SELECT COALESCE(l.q_id, v.q_id) AS q_id,
-             COALESCE(l.doc_id, v.doc_id) AS doc_id,
-             l.r_lex, v.r_vec,
-             COALESCE(1.0 / (60 + l.r_lex), 0)
-               + COALESCE(1.0 / (60 + v.r_vec), 0) AS rrf
-      FROM lex l FULL OUTER JOIN vec v
-        ON l.q_id = v.q_id AND l.doc_id = v.doc_id
-    ),
-    topr AS (
-      SELECT q_id, doc_id, r_lex, r_vec, rrf,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY rrf DESC, doc_id) AS rk
-      FROM fused
-    )
-    SELECT q_id, doc_id, r_lex, r_vec, ROUND(rrf, 6) AS rrf
-    FROM topr WHERE rk <= 5 ORDER BY q_id, doc_id
-    """.format(
-        pq=_hybrid_pq_ctes(),
-        qterms=_RRF_QTERMS_SQL,
-        all_terms=_RRF_ALL_TERMS_SQL,
-    ),
-    doc="batched hybrid RRF with a PQ/REFINE dense side — the "
-    "memory-bound counterpart of search_hybrid_rrf_batch_ann's IVF "
-    "side, closing the r10-verdict gap between the batched hybrid "
-    "and the PQ story at 100 TB: the same three (BM25 bag, dense "
-    "query embedding) queries, but each query's vector candidates "
-    "come from the trained product-quantizer's ADC scan "
-    "(operators/similarity.py:pq_topk — 16 subspace codebooks, "
-    "per-query (s,code) dot LUT broadcast, compressed-domain scores "
-    "folded in subspace order), shortlisted to the ADC top-50 and "
-    "exactly re-ranked on raw unit vectors (FAISS IndexRefine). Docs "
-    "outside the shortlist contribute only their lexical rank (full "
-    "outer join + coalesce) — ANN recall loss shifts fused ranks, "
-    "never drops lexical hits. Scale shape: ONE corpus text scan for "
-    "all BM25 bags; the dense corpus is scanned as ~2% code bytes "
-    "(the PQ memory play — no raw-vector shuffle anywhere); the "
-    "exact pass touches 50 x |queries| vectors; every per-query rank "
-    "(ADC shortlist, exact re-rank, lexical, fused) is an exact "
-    "distributed grouped_row_numbers rank — never a q_id-partitioned "
-    "corpus window. Dense-side recall + lexical-rank agreement vs "
-    "the exact batch plan pinned in tests/test_ann_recall.py (EXT, "
-    "retrieval)",
-    tags=("text", "similarity", "pipeline", "iterative"),
-)
-def search_hybrid_rrf_batch_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import pq_topk
-    from ..operators.stats import grouped_row_numbers
-
-    docs = load_table(spark, sf_dir, "documents")
-    bm = T.bm25_scores_multi(docs, _RRF_QUERIES)
-    lex = grouped_row_numbers(
-        bm, ["q_id"], [F.desc("bm25"), F.asc("doc_id")], out_col="r_lex"
-    ).select("q_id", "doc_id", "r_lex")
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 3)
-    # ADC top-50 shortlist per query, exactly re-ranked (refine);
-    # k=refine keeps every re-ranked candidate as the dense ranking
-    from .clustering import _TRAIN_N
-
-    dense = pq_topk(
-        emb, queries, "vec_id", "embedding",
-        m=16, codes_k=16, iters=2, k=50, n_dims=64, refine=50,
-        train_limit=_TRAIN_N, truncate_shortlist=True,
-    )
-    vec = dense.select(
-        F.col("q_id").cast("int").alias("q_id"),
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rank").alias("r_vec"),
-    )
-
-    fused = lex.join(vec, ["q_id", "doc_id"], "full").withColumn(
-        "rrf",
-        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0)),
-    )
-    top = grouped_row_numbers(
-        fused, ["q_id"], [F.desc("rrf"), F.asc("doc_id")], out_col="__rk"
-    )
-    return (
-        top.where(F.col("__rk") <= 5)
-        .select(
-            "q_id", "doc_id", "r_lex", "r_vec", F.round("rrf", 6).alias("rrf")
-        )
-        .orderBy("q_id", "doc_id")
-    )
+# The batched hybrids are one composition: a lexical side (q_id, doc_id,
+# r_lex), a dense side (q_id, doc_id, r_vec) and one fusion tail. Each
+# piece exists once per engine below; a plan differs only in its dense
+# side and its fused-score expression.
 
 
 def _hybrid_lex_ctes() -> str:
@@ -1376,62 +764,39 @@ def _hybrid_lex_ctes() -> str:
     )"""
 
 
-def _hybrid_ivfpq_ctes() -> str:
-    """Trained IVFADC CTEs for the batch-IVFPQ hybrid oracle — the
-    attested IVFADC chain (plans/clustering.py:_ivfpq_ctes) at the
-    same hyper-parameters as ann_topk_ivfpq (incl. the bounded vid<512
-    training sample), with the three hybrid query embeddings as the
-    query relation."""
-    from .clustering import _TRAIN_N, _ivfpq_ctes
-
-    return _ivfpq_ctes(
-        k_coarse=4, coarse_iters=2, n_probe=2, m=16, d=4,
-        codes_k=16, iters=2, n_q=3, train_n=_TRAIN_N,
-    )
-
-
-def _lex_spark_side(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared lexical half of the batched hybrid plans: one corpus text
-    scan scores all BM25 bags, ranked per query by an exact distributed
-    grouped_row_numbers rank."""
-    from ..operators.stats import grouped_row_numbers
-
-    docs = load_table(spark, sf_dir, "documents")
-    bm = T.bm25_scores_multi(docs, _RRF_QUERIES)
-    return grouped_row_numbers(
-        bm, ["q_id"], [F.desc("bm25"), F.asc("doc_id")], out_col="r_lex"
-    ).select("q_id", "doc_id", "r_lex")
-
-
-def _rrf_fuse_top5(lex: DataFrame, vec: DataFrame) -> DataFrame:
-    """Unweighted RRF fusion + per-query top-5 (the shared tail of the
-    batched hybrid plans): full outer join so a doc missing from one
-    ranking still scores, exact distributed fused ranks."""
-    from ..operators.stats import grouped_row_numbers
-
-    fused = lex.join(vec, ["q_id", "doc_id"], "full").withColumn(
-        "rrf",
-        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0)),
-    )
-    top = grouped_row_numbers(
-        fused, ["q_id"], [F.desc("rrf"), F.asc("doc_id")], out_col="__rk"
-    )
-    return (
-        top.where(F.col("__rk") <= 5)
-        .select(
-            "q_id", "doc_id", "r_lex", "r_vec", F.round("rrf", 6).alias("rrf")
-        )
-        .orderBy("q_id", "doc_id")
-    )
+def _hybrid_exact_vec_ctes() -> str:
+    """The exact dense half of the batched hybrid oracles: the whole
+    corpus unit-normalized and ranked by cosine against each query
+    embedding (vec_id 0/1/2). Emits CTEs raw/e/qv/vec."""
+    return """raw AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      FROM embeddings
+    ),
+    e AS (
+      SELECT vec_id,
+             list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
+      FROM raw
+    ),
+    qv AS (
+      SELECT CAST(vec_id AS INTEGER) AS q_id, u AS qu
+      FROM e WHERE vec_id < 3
+    ),
+    vec AS (
+      SELECT q_id, vec_id AS doc_id,
+             ROW_NUMBER() OVER (
+               PARTITION BY q_id
+               ORDER BY list_dot_product(u, qu) DESC, vec_id) AS r_vec
+      FROM e CROSS JOIN qv
+    )"""
 
 
-@register(
-    "search_hybrid_rrf_batch_ivfpq",
-    oracle=f"""
-    WITH {{ivfpq}},
-    {{lex}},
-    short AS (
+def _hybrid_adc_vec_ctes() -> str:
+    """The ADC dense half of the PQ and IVFPQ hybrid oracles: the
+    quantizer chain's ``scored`` approximate cosines shortlisted to the
+    top 50 per query, then exactly re-ranked on the ``uu`` unit vectors
+    (mirrors the refine tail of operators/similarity.py). Emits CTEs
+    short/ref/vec."""
+    return """short AS (
       SELECT q_id, vid FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
                     ORDER BY approx_cosine DESC, vid) AS arank
@@ -1449,28 +814,406 @@ def _rrf_fuse_top5(lex: DataFrame, vec: DataFrame) -> DataFrame:
              ROW_NUMBER() OVER (PARTITION BY q_id
                                 ORDER BY cosine DESC, vid) AS r_vec
       FROM ref
-    ),
-    fused AS (
+    )"""
+
+
+_RRF_SUM_SQL = (
+    "COALESCE(1.0 / (60 + l.r_lex), 0) + COALESCE(1.0 / (60 + v.r_vec), 0)"
+)
+
+
+def _hybrid_fuse_sql(rrf: str = _RRF_SUM_SQL, alpha: str = "") -> str:
+    """The shared tail of the batched hybrid oracles (mirrors
+    :func:`_rrf_fuse_top5`): ``lex`` and ``vec`` full-outer-joined on
+    (q_id, doc_id), scored by ``rrf`` (an expression over ``l.r_lex``
+    and ``v.r_vec``), top-5 per query. ``alpha`` names a (q_id, alpha)
+    weight relation; it is inner-joined as ``a`` on the fused q_id and
+    its ``alpha`` rides to the output. Emits CTEs fused/topr and the
+    final SELECT."""
+    pick = carry = join = ""
+    if alpha:
+        pick, carry = " a.alpha,", " alpha,"
+        join = f"JOIN {alpha} a ON a.q_id = COALESCE(l.q_id, v.q_id)"
+    return f"""fused AS (
       SELECT COALESCE(l.q_id, v.q_id) AS q_id,
              COALESCE(l.doc_id, v.doc_id) AS doc_id,
-             l.r_lex, v.r_vec,
-             COALESCE(1.0 / (60 + l.r_lex), 0)
-               + COALESCE(1.0 / (60 + v.r_vec), 0) AS rrf
+             l.r_lex, v.r_vec,{pick}
+             {rrf} AS rrf
       FROM lex l FULL OUTER JOIN vec v
         ON l.q_id = v.q_id AND l.doc_id = v.doc_id
+      {join}
     ),
     topr AS (
-      SELECT q_id, doc_id, r_lex, r_vec, rrf,
+      SELECT q_id, doc_id, r_lex, r_vec,{carry} rrf,
              ROW_NUMBER() OVER (PARTITION BY q_id
                                 ORDER BY rrf DESC, doc_id) AS rk
       FROM fused
     )
-    SELECT q_id, doc_id, r_lex, r_vec, ROUND(rrf, 6) AS rrf
-    FROM topr WHERE rk <= 5 ORDER BY q_id, doc_id
-    """.format(ivfpq=_hybrid_ivfpq_ctes(), lex=_hybrid_lex_ctes()),
+    SELECT q_id, doc_id, r_lex, r_vec,{carry} ROUND(rrf, 6) AS rrf
+    FROM topr WHERE rk <= 5 ORDER BY q_id, doc_id"""
+
+
+def _lex_spark_side(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared lexical half of the batched hybrid plans: one corpus text
+    scan scores all BM25 bags, ranked per query by an exact distributed
+    grouped_row_numbers rank. Returns (q_id, doc_id, r_lex)."""
+    from ..operators.stats import grouped_row_numbers
+
+    docs = load_table(spark, sf_dir, "documents")
+    bm = T.bm25_scores_multi(docs, _RRF_QUERIES)
+    return grouped_row_numbers(
+        bm, ["q_id"], [F.desc("bm25"), F.asc("doc_id")], out_col="r_lex"
+    ).select("q_id", "doc_id", "r_lex")
+
+
+def _exact_vec_spark_side(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared exact dense half of the batched hybrid plans: every corpus
+    unit vector scored against the broadcast query embeddings (vec_id
+    0/1/2), ranked per query by an exact distributed
+    grouped_row_numbers rank. Returns (q_id, doc_id, r_vec)."""
+    from ..functions.vectors import vec_dot, with_unit_vector
+    from ..operators.stats import grouped_row_numbers
+
+    emb = with_unit_vector(
+        load_table(spark, sf_dir, "embeddings"), "embedding", "__u"
+    )
+    qv = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").cast("int").alias("q_id"), F.col("__u").alias("__qu")
+    )
+    scored = emb.crossJoin(F.broadcast(qv)).withColumn(
+        "cosine", vec_dot("__u", "__qu")
+    )
+    return grouped_row_numbers(
+        scored, ["q_id"], [F.desc("cosine"), F.asc("vec_id")], out_col="r_vec"
+    ).select("q_id", F.col("vec_id").alias("doc_id"), "r_vec")
+
+
+def _adc_vec_spark_side(dense: DataFrame) -> DataFrame:
+    """A refined ADC top-k (pq_topk / ivfpq_topk with ``k=refine``) as
+    the dense half of a batched hybrid: (q_id, doc_id, r_vec)."""
+    return dense.select(
+        F.col("q_id").cast("int").alias("q_id"),
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("rank").alias("r_vec"),
+    )
+
+
+def _rrf(rank_col: str) -> Column:
+    """One ranking's RRF term 1/(60 + rank); 0 for a doc it misses."""
+    return F.coalesce(F.lit(1.0) / (F.lit(60) + F.col(rank_col)), F.lit(0.0))
+
+
+def _rrf_fuse_top5(
+    lex: DataFrame,
+    vec: DataFrame,
+    rrf: Column | None = None,
+    alpha: DataFrame | None = None,
+) -> DataFrame:
+    """RRF fusion + per-query top-5, the shared tail of the batched
+    hybrid plans: a full outer join so a doc missing from one ranking
+    still scores, then exact distributed fused ranks. ``rrf`` is the
+    fused-score expression (default: the unweighted sum of both RRF
+    terms). ``alpha`` is a per-query (q_id, alpha) weight relation,
+    inner-joined on the fused q_id; its ``alpha`` rides to the
+    output."""
+    from ..operators.stats import grouped_row_numbers
+
+    fused = lex.join(vec, ["q_id", "doc_id"], "full")
+    carry: list[str] = []
+    if alpha is not None:
+        fused = fused.join(F.broadcast(alpha), "q_id")
+        carry = ["alpha"]
+    if rrf is None:
+        rrf = _rrf("r_lex") + _rrf("r_vec")
+    top = grouped_row_numbers(
+        fused.withColumn("rrf", rrf),
+        ["q_id"],
+        [F.desc("rrf"), F.asc("doc_id")],
+        out_col="__rk",
+    )
+    return (
+        top.where(F.col("__rk") <= 5)
+        .select(
+            "q_id", "doc_id", "r_lex", "r_vec", *carry,
+            F.round("rrf", 6).alias("rrf"),
+        )
+        .orderBy("q_id", "doc_id")
+    )
+
+
+@register(
+    "search_hybrid_rrf_batch",
+    oracle=f"""
+    WITH {_hybrid_lex_ctes()},
+    {_hybrid_exact_vec_ctes()},
+    {_hybrid_fuse_sql()}
+    """,
+    doc="BATCHED hybrid retrieval with Reciprocal Rank Fusion (the "
+    "query-relation generalization of search_hybrid_rrf): three "
+    "queries — each a BM25 term bag paired with a dense query "
+    "embedding (vec_id 0/1/2) — fused per query by rrf = sum "
+    "1/(60+rank), top-5 per query. ONE corpus scan scores all "
+    "lexical bags (operators/text.py:bm25_scores_multi — postings "
+    "join a broadcast query-dimension (q_id, term) relation); every "
+    "per-query ranking is an EXACT DISTRIBUTED rank via "
+    "operators/stats.py:grouped_row_numbers (one global_row_numbers "
+    "pass over the (q_id, score) composite order + a |queries|-sized "
+    "offset join) — NEVER a q_id-partitioned window, which is "
+    "lint-clean but still funnels |corpus| rows per query through "
+    "one task. A doc missing from a query's lexical list contributes "
+    "only its vector rank (full outer join + coalesce). The lexical "
+    "side, the exact dense side and the fusion tail are the shared "
+    "pieces every batched hybrid composes (_lex_spark_side, "
+    "_exact_vec_spark_side, _rrf_fuse_top5). At 100 TB the "
+    "dense side ranks ANN candidates (ann_topk_ivf) per query; the "
+    "fusion and rank machinery are unchanged (EXT, retrieval)",
+    tags=("text", "similarity", "pipeline"),
+)
+def search_hybrid_rrf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lex = _lex_spark_side(spark, sf_dir)
+    return _rrf_fuse_top5(lex, _exact_vec_spark_side(spark, sf_dir))
+
+
+def _hybrid_ann_kmeans_ctes() -> str:
+    """Trained-quantizer CTEs for the batch-ANN hybrid oracle — the
+    attested k-means chain (plans/clustering.py:_kmeans_ctes), with
+    the bounded vid<512 training sample the serving plans use."""
+    from .clustering import _TRAIN_N, _kmeans_ctes
+
+    return _kmeans_ctes(k=4, iters=2, final_assign=True, train_n=_TRAIN_N)
+
+
+@register(
+    "search_hybrid_rrf_batch_ann",
+    oracle=f"""
+    WITH {_hybrid_ann_kmeans_ctes()},
+    {_hybrid_lex_ctes()},
+    u AS (
+      SELECT vid, cid,
+             list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
+      FROM a3
+    ),
+    qprobe AS (
+      SELECT CAST(vid AS INTEGER) AS q_id, cid AS cell FROM (
+        SELECT vid, cid,
+               ROW_NUMBER() OVER (PARTITION BY vid ORDER BY dist2, cid) AS rn
+        FROM s3
+      ) WHERE rn <= 2 AND vid < 3
+    ),
+    qv AS (
+      SELECT CAST(vid AS INTEGER) AS q_id, u AS qu
+      FROM u WHERE vid < 3
+    ),
+    cand AS (
+      SELECT p.q_id, c.vid AS doc_id, list_dot_product(q.qu, c.u) AS cosine
+      FROM qprobe p
+      JOIN u c ON c.cid = p.cell
+      JOIN qv q ON q.q_id = p.q_id
+    ),
+    vec AS (
+      SELECT q_id, doc_id,
+             ROW_NUMBER() OVER (PARTITION BY q_id
+                                ORDER BY cosine DESC, doc_id) AS r_vec
+      FROM cand
+    ),
+    {_hybrid_fuse_sql()}
+    """,
+    doc="batched hybrid RRF with an ANN DENSE SIDE (the end-to-end "
+    "100 TB shape search_hybrid_rrf_batch documents): the same three "
+    "(BM25 bag, dense query embedding) queries, but each query's "
+    "vector ranking covers only its IVF CANDIDATE SET — the corpus "
+    "vectors whose trained-quantizer cell (k=4, 2 Lloyd rounds, the "
+    "attested kmeans_centroids chain) is among the query's TWO "
+    "nearest cells (kmeans_assign_topn multiprobe, the attested "
+    "ann_topk_multiprobe machinery) — instead of the full corpus. "
+    "Docs outside the probed cells contribute only their lexical "
+    "rank (full outer join + coalesce), exactly how a production "
+    "retrieval stack degrades: ANN recall loss shifts fused ranks, "
+    "it never drops lexical hits. Scale shape: ONE corpus text scan "
+    "for all BM25 bags (bm25_scores_multi), ONE corpus embedding "
+    "scan for assignment; candidates = cell-equi-join against a "
+    "broadcast query-dimension probe relation; every ranking is an "
+    "exact distributed grouped_row_numbers rank over the (bounded) "
+    "candidate relation — never a q_id-partitioned corpus window. "
+    "Dense-side recall vs the exact full-corpus ranking is pinned in "
+    "tests/test_ann_recall.py (EXT, retrieval)",
+    tags=("text", "similarity", "pipeline", "iterative"),
+)
+def search_hybrid_rrf_batch_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.storagelevel import StorageLevel
+
+    from ..functions.vectors import as_double_array, vec_divide, vec_dot
+    from ..operators.clustering import (
+        kmeans_assign,
+        kmeans_assign_topn,
+        kmeans_centroids,
+    )
+    from ..operators.stats import grouped_row_numbers
+    from .clustering import _TRAIN_N
+
+    lex = _lex_spark_side(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    e = emb.select(
+        F.col("vec_id").alias("vid"), as_double_array("embedding").alias("v")
+    )
+    cent = kmeans_centroids(
+        emb, "vec_id", "embedding", k=4, iters=2, train_limit=_TRAIN_N
+    )
+    nrm = F.sqrt(vec_dot("v", "v"))
+    # persisted: the query side and the corpus side both consume the
+    # assigned+normalized relation (same reason as ann_topk_multiprobe)
+    unit = (
+        kmeans_assign(e, cent)
+        .withColumn("u", vec_divide("v", nrm))
+        .select("vid", "cid", "u")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    probes = kmeans_assign_topn(e.where(F.col("vid") < 3), cent, n=2).select(
+        F.col("vid").cast("int").alias("q_id"), F.col("cid").alias("cell")
+    )
+    qv = unit.where(F.col("vid") < 3).select(
+        F.col("vid").cast("int").alias("q_id"), F.col("u").alias("qu")
+    )
+    cand = (
+        unit.select(
+            F.col("vid").alias("doc_id"),
+            F.col("cid").alias("cell"),
+            F.col("u").alias("cu"),
+        )
+        .join(F.broadcast(probes), "cell")
+        .join(F.broadcast(qv), "q_id")
+        .withColumn("cosine", vec_dot("qu", "cu"))
+    )
+    vec = grouped_row_numbers(
+        cand, ["q_id"], [F.desc("cosine"), F.asc("doc_id")], out_col="r_vec"
+    ).select("q_id", "doc_id", "r_vec")
+    return _rrf_fuse_top5(lex, vec)
+
+
+#: Lexical weight for the alpha-weighted RRF plan. PLUGGABLE: a
+#: production stack tunes this per corpus/eval set; 0.7 expresses a
+#: lexical-leaning deployment (e.g. code or exact-entity search).
+_RRF_ALPHA = 0.7
+_RRF_WEIGHTED_SQL = (
+    f"CAST({_RRF_ALPHA} AS DOUBLE) * COALESCE(1.0 / (60 + l.r_lex), 0)"
+    f" + CAST({1.0 - _RRF_ALPHA} AS DOUBLE) * COALESCE(1.0 / (60 + v.r_vec), 0)"
+)
+
+
+@register(
+    "search_hybrid_rrf_weighted",
+    oracle=f"""
+    WITH {_hybrid_lex_ctes()},
+    {_hybrid_exact_vec_ctes()},
+    {_hybrid_fuse_sql(_RRF_WEIGHTED_SQL)}
+    """,
+    doc="ALPHA-WEIGHTED batched hybrid RRF (the tuning knob production "
+    "hybrid search exposes): rrf = "
+    "alpha/(60+r_lex) + (1-alpha)/(60+r_vec) with alpha = 0.7 — a "
+    "lexical-leaning fusion for exact-entity-heavy corpora; alpha is "
+    "the pluggable policy constant and is mirrored literally into the "
+    "oracle. Same lexical side, exact dense side and fusion tail as "
+    "search_hybrid_rrf_batch (one corpus text scan for all BM25 bags "
+    "via bm25_scores_multi, one embedding scan, every per-query "
+    "ranking an exact distributed grouped_row_numbers rank, full outer "
+    "fuse so a doc missing from one ranking still scores); only the "
+    "fused-score expression differs. The weight multiplies integer-rank "
+    "reciprocals, so the doubles stay bit-identical cross-engine "
+    "before the 6-dp presentation rounding (EXT, retrieval)",
+    tags=("text", "similarity", "pipeline"),
+)
+def search_hybrid_rrf_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lex = _lex_spark_side(spark, sf_dir)
+    rrf = (
+        F.lit(_RRF_ALPHA) * _rrf("r_lex")
+        + F.lit(1.0 - _RRF_ALPHA) * _rrf("r_vec")
+    )
+    return _rrf_fuse_top5(lex, _exact_vec_spark_side(spark, sf_dir), rrf)
+
+
+def _hybrid_pq_ctes() -> str:
+    """Trained product-quantizer CTEs for the batch-PQ hybrid oracle —
+    the attested PQ chain (plans/clustering.py:_pq_ctes) at the same
+    hyper-parameters as ann_topk_pq_refine (incl. the bounded vid<512
+    training sample), with the three hybrid query embeddings as the
+    query relation."""
+    from .clustering import _TRAIN_N, _pq_ctes
+
+    return _pq_ctes(m=16, d=4, k=16, iters=2, n_q=3, train_n=_TRAIN_N)
+
+
+@register(
+    "search_hybrid_rrf_batch_pq",
+    oracle=f"""
+    WITH {_hybrid_pq_ctes()},
+    {_hybrid_lex_ctes()},
+    {_hybrid_adc_vec_ctes()},
+    {_hybrid_fuse_sql()}
+    """,
+    doc="batched hybrid RRF with a PQ/REFINE dense side — the "
+    "memory-bound counterpart of search_hybrid_rrf_batch_ann's IVF "
+    "side, joining the batched hybrid to the PQ story at 100 TB: the "
+    "same three (BM25 bag, dense "
+    "query embedding) queries, but each query's vector candidates "
+    "come from the trained product-quantizer's ADC scan "
+    "(operators/similarity.py:pq_topk — 16 subspace codebooks, "
+    "per-query (s,code) dot LUT broadcast, compressed-domain scores "
+    "folded in subspace order), shortlisted to the ADC top-50 and "
+    "exactly re-ranked on raw unit vectors (FAISS IndexRefine). Docs "
+    "outside the shortlist contribute only their lexical rank (full "
+    "outer join + coalesce) — ANN recall loss shifts fused ranks, "
+    "never drops lexical hits. Scale shape: ONE corpus text scan for "
+    "all BM25 bags; the dense corpus is scanned as ~2% code bytes "
+    "(the PQ memory play — no raw-vector shuffle anywhere); the "
+    "exact pass touches 50 x |queries| vectors; every per-query rank "
+    "(ADC shortlist, exact re-rank, lexical, fused) is an exact "
+    "distributed grouped_row_numbers rank — never a q_id-partitioned "
+    "corpus window. Dense-side recall + lexical-rank agreement vs "
+    "the exact batch plan pinned in tests/test_ann_recall.py (EXT, "
+    "retrieval)",
+    tags=("text", "similarity", "pipeline", "iterative"),
+)
+def search_hybrid_rrf_batch_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.similarity import pq_topk
+    from .clustering import _TRAIN_N
+
+    lex = _lex_spark_side(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    # ADC top-50 shortlist per query, exactly re-ranked (refine);
+    # k=refine keeps every re-ranked candidate as the dense ranking
+    dense = pq_topk(
+        emb, emb.where(F.col("vec_id") < 3), "vec_id", "embedding",
+        m=16, codes_k=16, iters=2, k=50, n_dims=64, refine=50,
+        train_limit=_TRAIN_N, truncate_shortlist=True,
+    )
+    return _rrf_fuse_top5(lex, _adc_vec_spark_side(dense))
+
+
+def _hybrid_ivfpq_ctes() -> str:
+    """Trained IVFADC CTEs for the batch-IVFPQ hybrid oracle — the
+    attested IVFADC chain (plans/clustering.py:_ivfpq_ctes) at the
+    same hyper-parameters as ann_topk_ivfpq (incl. the bounded vid<512
+    training sample), with the three hybrid query embeddings as the
+    query relation."""
+    from .clustering import _TRAIN_N, _ivfpq_ctes
+
+    return _ivfpq_ctes(
+        k_coarse=4, coarse_iters=2, n_probe=2, m=16, d=4,
+        codes_k=16, iters=2, n_q=3, train_n=_TRAIN_N,
+    )
+
+
+@register(
+    "search_hybrid_rrf_batch_ivfpq",
+    oracle=f"""
+    WITH {_hybrid_ivfpq_ctes()},
+    {_hybrid_lex_ctes()},
+    {_hybrid_adc_vec_ctes()},
+    {_hybrid_fuse_sql()}
+    """,
     doc="batched hybrid RRF with an IVFADC DENSE SIDE — the full FAISS "
-    "IndexIVFPQ+IndexRefine retrieval story composed into the hybrid "
-    "(r11-verdict queue item), uniting the two prior dense options: "
+    "IndexIVFPQ+IndexRefine retrieval story composed into the hybrid, "
+    "uniting the two prior dense options: "
     "the batch_ann side prunes cells but scans raw vectors, the "
     "batch_pq side compresses to codes but scans every cell; this "
     "side does BOTH — each query's candidates are the RESIDUAL-PQ "
@@ -1495,22 +1238,16 @@ def search_hybrid_rrf_batch_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame
 
     lex = _lex_spark_side(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 3)
     # IVFADC shortlist (probed cells only, compressed-domain ADC) with
     # exact top-50 refine; k=refine keeps every re-ranked candidate as
     # the dense ranking, same contract as the PQ hybrid
     dense = ivfpq_topk(
-        emb, queries, "vec_id", "embedding",
+        emb, emb.where(F.col("vec_id") < 3), "vec_id", "embedding",
         k_coarse=4, coarse_iters=2, n_probe=2,
         m=16, codes_k=16, iters=2, k=50, n_dims=64, refine=50,
         train_limit=_TRAIN_N, truncate_shortlist=True,
     )
-    vec = dense.select(
-        F.col("q_id").cast("int").alias("q_id"),
-        F.col("neighbor_id").alias("doc_id"),
-        F.col("rank").alias("r_vec"),
-    )
-    return _rrf_fuse_top5(lex, vec)
+    return _rrf_fuse_top5(lex, _adc_vec_spark_side(dense))
 
 
 #: Per-query fusion weights for the alpha-as-data hybrid plan: the
@@ -1522,111 +1259,46 @@ _RRF_QUERY_ALPHA: dict[int, float] = {0: 0.7, 1: 0.5, 2: 0.3}
 _RRF_QALPHA_SQL = ",".join(
     f"({q},CAST({a} AS DOUBLE))" for q, a in sorted(_RRF_QUERY_ALPHA.items())
 )
+_RRF_QALPHA_SCORE_SQL = (
+    "a.alpha * COALESCE(1.0 / (60 + l.r_lex), 0)"
+    " + (1.0 - a.alpha) * COALESCE(1.0 / (60 + v.r_vec), 0)"
+)
 
 
 @register(
     "search_hybrid_rrf_alpha_col",
     oracle=f"""
-    WITH {{lex}},
-    raw AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    e AS (
-      SELECT vec_id,
-             list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS u
-      FROM raw
-    ),
-    qv AS (
-      SELECT CAST(vec_id AS INTEGER) AS q_id, u AS qu
-      FROM e WHERE vec_id < 3
-    ),
-    vec AS (
-      SELECT q_id, vec_id AS doc_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY q_id
-               ORDER BY list_dot_product(u, qu) DESC, vec_id) AS r_vec
-      FROM e CROSS JOIN qv
-    ),
-    qalpha(q_id, alpha) AS (VALUES {{qalpha}}),
-    fused AS (
-      SELECT COALESCE(l.q_id, v.q_id) AS q_id,
-             COALESCE(l.doc_id, v.doc_id) AS doc_id,
-             l.r_lex, v.r_vec, a.alpha,
-             a.alpha * COALESCE(1.0 / (60 + l.r_lex), 0)
-               + (1.0 - a.alpha) * COALESCE(1.0 / (60 + v.r_vec), 0) AS rrf
-      FROM lex l FULL OUTER JOIN vec v
-        ON l.q_id = v.q_id AND l.doc_id = v.doc_id
-      JOIN qalpha a ON a.q_id = COALESCE(l.q_id, v.q_id)
-    ),
-    topr AS (
-      SELECT q_id, doc_id, r_lex, r_vec, alpha, rrf,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY rrf DESC, doc_id) AS rk
-      FROM fused
-    )
-    SELECT q_id, doc_id, r_lex, r_vec, alpha, ROUND(rrf, 6) AS rrf
-    FROM topr WHERE rk <= 5 ORDER BY q_id, doc_id
-    """.format(lex=_hybrid_lex_ctes(), qalpha=_RRF_QALPHA_SQL),
-    doc="batched hybrid RRF with PER-QUERY fusion weights AS DATA "
-    "(r11-verdict queue item): alpha rides the query relation as a "
+    WITH {_hybrid_lex_ctes()},
+    {_hybrid_exact_vec_ctes()},
+    qalpha(q_id, alpha) AS (VALUES {_RRF_QALPHA_SQL}),
+    {_hybrid_fuse_sql(_RRF_QALPHA_SCORE_SQL, alpha="qalpha")}
+    """,
+    doc="batched hybrid RRF with PER-QUERY fusion weights AS DATA: "
+    "alpha rides the query relation as a "
     "column — (q_id 0,1,2) fuse at alpha 0.7/0.5/0.3 — instead of "
     "one plan-literal weight, which is how production hybrid search "
     "ships per-tenant/per-segment tuning (entity-heavy tenants lean "
     "lexical, exploratory ones lean dense) without a plan change per "
     "tenant. rrf = alpha/(60+r_lex) + (1-alpha)/(60+r_vec); the "
     "alpha relation is query-dimension-sized and broadcast — ZERO "
-    "new scan shape vs search_hybrid_rrf_batch (one corpus text scan "
-    "for all BM25 bags, one embedding scan, every per-query ranking "
-    "an exact distributed grouped_row_numbers rank, full outer fuse "
-    "+ INNER alpha join keyed on the fused q_id so every surviving "
-    "row carries its weight). The weight multiplies integer-rank "
+    "new scan shape vs search_hybrid_rrf_batch (the same lexical "
+    "side, exact dense side and fusion tail; the fusion tail takes "
+    "the alpha relation as its per-query weights, an INNER join keyed "
+    "on the fused q_id so every surviving row carries its weight). "
+    "The weight multiplies integer-rank "
     "reciprocals, bit-identical cross-engine before the 6-dp "
     "presentation rounding; alpha is emitted as an output column so "
     "the knob is auditable per row (EXT, retrieval)",
     tags=("text", "similarity", "pipeline"),
 )
 def search_hybrid_rrf_alpha_col(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import vec_dot, with_unit_vector
-    from ..operators.stats import grouped_row_numbers
-
     lex = _lex_spark_side(spark, sf_dir)
-
-    emb = with_unit_vector(
-        load_table(spark, sf_dir, "embeddings"), "embedding", "__u"
-    )
-    qv = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").cast("int").alias("q_id"), F.col("__u").alias("__qu")
-    )
-    scored = emb.crossJoin(F.broadcast(qv)).withColumn(
-        "cosine", vec_dot("__u", "__qu")
-    )
-    vec = grouped_row_numbers(
-        scored, ["q_id"], [F.desc("cosine"), F.asc("vec_id")], out_col="r_vec"
-    ).select("q_id", F.col("vec_id").alias("doc_id"), "r_vec")
-
+    vec = _exact_vec_spark_side(spark, sf_dir)
     alpha = spark.createDataFrame(
         sorted(_RRF_QUERY_ALPHA.items()), "q_id int, alpha double"
     )
-    fused = (
-        lex.join(vec, ["q_id", "doc_id"], "full")
-        .join(F.broadcast(alpha), "q_id")
-        .withColumn(
-            "rrf",
-            F.col("alpha")
-            * F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-            + (F.lit(1.0) - F.col("alpha"))
-            * F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("r_vec")), F.lit(0.0)),
-        )
+    rrf = (
+        F.col("alpha") * _rrf("r_lex")
+        + (F.lit(1.0) - F.col("alpha")) * _rrf("r_vec")
     )
-    top = grouped_row_numbers(
-        fused, ["q_id"], [F.desc("rrf"), F.asc("doc_id")], out_col="__rk"
-    )
-    return (
-        top.where(F.col("__rk") <= 5)
-        .select(
-            "q_id", "doc_id", "r_lex", "r_vec", "alpha",
-            F.round("rrf", 6).alias("rrf"),
-        )
-        .orderBy("q_id", "doc_id")
-    )
+    return _rrf_fuse_top5(lex, vec, rrf, alpha=alpha)

@@ -90,6 +90,14 @@ def test_batched_map_explicit_batches_complete_in_order(handler):
     assert got == [x * 2 for x in range(10)]
 
 
+@pytest.mark.parametrize("batch_size", [0, -3])
+def test_batched_map_rejects_non_positive_batch_size(handler, batch_size):
+    # range(0, n, -3) is empty and range(0, n, 0) raises a bare range()
+    # error; both must be a ValueError naming the argument instead
+    with pytest.raises(ValueError, match="batch_size"):
+        handler.batched_map(lambda x: x, [1, 2, 3], batch_size=batch_size)
+
+
 def test_map_forwards_kwargs(handler):
     # reference pass-through: extra kwargs reach every func call
     # (distributed_handler.py:117-128)

@@ -1086,19 +1086,18 @@ def test_hybrid_rrf_batch_matches_single_query_plan(spark, sf_dir):
         assert single[d]["rrf"] == batch[d]["rrf"], d
 
 
-def test_hybrid_rrf_batch_never_single_partition_sorts_data(spark, sf_dir):
-    # Every per-query ranking must be the two-phase range-partitioned
-    # grouped_row_numbers form: range exchanges leading with q_id on
-    # the composite (q_id, score) order for all three DATA rankings
-    # (lexical, vector, fused); unpartitioned windows only over the
-    # tiny per-partition counts relations. The lexical side must scan
-    # the documents parquet exactly twice — postings (persisted, reused
-    # for df) + the corpus-stats aggregate — exactly like the attested
-    # single-query bm25_scores shape, however many queries ride the
-    # batch.
+def _assert_batched_hybrid_shape(plan: str) -> None:
+    """The contracts every batched hybrid shares. Every per-query
+    ranking is the two-phase range-partitioned grouped_row_numbers
+    form: >= 3 distinct range exchanges leading with q_id on the
+    composite (q_id, score) order (lexical, fused, and the dense
+    side's); unpartitioned windows run only over the tiny
+    per-partition counts relations. The lexical side scans the
+    documents parquet exactly twice — postings (persisted, reused for
+    df) + the corpus-stats aggregate — like the single-query
+    bm25_scores shape, however many queries ride the batch."""
     import re
 
-    plan = _formatted(spark, "search_hybrid_rrf_batch", sf_dir)
     range_parts = re.findall(r"rangepartitioning\(q_id\S*", plan)
     assert len(set(range_parts)) >= 3, set(range_parts)
     # unique scan NODES (the tree rendering repeats subtree refs)
@@ -1111,26 +1110,37 @@ def test_hybrid_rrf_batch_never_single_partition_sorts_data(spark, sf_dir):
     assert len(doc_scan_ids) == 2, doc_scan_ids
 
 
+def _assert_shortlist_boundary(plan: str) -> None:
+    """The ADC hybrids truncate the refine-shortlist lineage (see
+    similarity._adc_rank_refine, truncate_shortlist): the boundary is a
+    LogicalRDD scan whose output is exactly the shortlist's (q_id,
+    vid). Any other ExistingRDD (the BM25 (q_id, term) query relation
+    is one) does not count."""
+    import re
+
+    assert re.search(
+        r"\(\d+\) Scan ExistingRDD\nOutput \[2\]: \[q_id#\d+L?, vid#\d+L?\]\n",
+        plan,
+    ), "shortlist truncation boundary missing"
+
+
+def test_hybrid_rrf_batch_never_single_partition_sorts_data(spark, sf_dir):
+    _assert_batched_hybrid_shape(
+        _formatted(spark, "search_hybrid_rrf_batch", sf_dir)
+    )
+
+
 def test_hybrid_rrf_batch_ann_pruned_dense_side_plan_shape(spark, sf_dir):
-    # The ANN variant inherits the batch plan's contracts — >= 3
-    # distinct range-partitioned grouped ranks, documents scanned
-    # exactly twice — and must additionally keep its dense side
-    # CELL-PRUNED: the candidate relation is an equi-join on `cell`
-    # (shows up as cell join keys / cell hash-partitioning), never a
-    # corpus×queries cartesian. The only nested-loop join allowed is
-    # the k-centroid broadcast inside kmeans assignment.
+    # The ANN variant inherits the batch plan's contracts and must
+    # additionally keep its dense side CELL-PRUNED: the candidate
+    # relation is an equi-join on `cell` (shows up as cell join keys /
+    # cell hash-partitioning), never a corpus×queries cartesian. The
+    # only nested-loop join allowed is the k-centroid broadcast inside
+    # kmeans assignment.
     import re
 
     plan = _formatted(spark, "search_hybrid_rrf_batch_ann", sf_dir)
-    range_parts = re.findall(r"rangepartitioning\(q_id\S*", plan)
-    assert len(set(range_parts)) >= 3, set(range_parts)
-    doc_scan_ids = set()
-    for m in re.finditer(
-        r"\((\d+)\) Scan parquet[^\n]*\n(?:[^\n]*\n){1,6}", plan
-    ):
-        if "documents" in m.group(0):
-            doc_scan_ids.add(m.group(1))
-    assert len(doc_scan_ids) == 2, doc_scan_ids
+    _assert_batched_hybrid_shape(plan)
     # the probe relation joins candidates on the cell key (renders as
     # the join's key detail lines), and nothing plans a cartesian
     assert re.search(r"keys \[1\]: \[cell#", plan), (
@@ -1140,36 +1150,23 @@ def test_hybrid_rrf_batch_ann_pruned_dense_side_plan_shape(spark, sf_dir):
 
 
 def test_hybrid_rrf_batch_pq_compressed_dense_side_plan_shape(spark, sf_dir):
-    # The PQ variant inherits the batch plan's contracts — >= 3
-    # distinct range-partitioned grouped ranks (lexical, fused, plus
-    # the PQ shortlist/refine ranks), documents scanned exactly
-    # twice — and must additionally keep its dense side COMPRESSED:
-    # the ADC scoring joins the corpus CODES against the broadcast
-    # per-query LUT (never the raw vectors — the only raw-vector
-    # touches are codebook training, the unit-vector derivation, and
-    # the 50-per-query refine fetch), and nothing plans a cartesian.
-    import re
-
+    # The PQ variant inherits the batch plan's contracts (its dense
+    # side adds the PQ shortlist/refine ranks) and must additionally
+    # keep its dense side COMPRESSED: the ADC scoring joins the corpus
+    # CODES against the broadcast per-query LUT (never the raw vectors
+    # — the only raw-vector touches are codebook training, the
+    # unit-vector derivation, and the 50-per-query refine fetch), and
+    # nothing plans a cartesian.
     plan = _formatted(spark, "search_hybrid_rrf_batch_pq", sf_dir)
-    range_parts = re.findall(r"rangepartitioning\(q_id\S*", plan)
-    assert len(set(range_parts)) >= 3, set(range_parts)
-    doc_scan_ids = set()
-    for m in re.finditer(
-        r"\((\d+)\) Scan parquet[^\n]*\n(?:[^\n]*\n){1,6}", plan
-    ):
-        if "documents" in m.group(0):
-            doc_scan_ids.add(m.group(1))
-    assert len(doc_scan_ids) == 2, doc_scan_ids
+    _assert_batched_hybrid_shape(plan)
     assert "CartesianProduct" not in plan
-    # round-13: the hybrid truncates the refine-shortlist lineage (see
-    # similarity.pq_topk truncate_shortlist), so the compressed-domain
-    # internals live BEHIND a LogicalRDD boundary in the final plan —
-    # the boundary itself must be present...
-    assert "ExistingRDD" in plan, "shortlist truncation boundary missing"
-    # ...and the round-12 compressed-scoring contract is pinned on the
-    # dense side's own (untruncated) plan: ADC scoring is the row-local
-    # fold of each row's m CODES against the broadcast per-query LUT
-    # map — never a shuffle of the codes or a join on the raw vectors.
+    # the compressed-domain internals live BEHIND the shortlist's
+    # LogicalRDD boundary in the final plan...
+    _assert_shortlist_boundary(plan)
+    # ...so the compressed-scoring contract is pinned on the dense
+    # side's own (untruncated) plan: ADC scoring is the row-local fold
+    # of each row's m CODES against the broadcast per-query LUT map —
+    # never a shuffle of the codes or a join on the raw vectors.
     from aics_dask_utils_spark.operators.similarity import pq_topk
     from aics_dask_utils_spark.plans.clustering import _TRAIN_N
     from aics_dask_utils_spark.sources import load_table
@@ -1193,31 +1190,20 @@ def test_hybrid_rrf_batch_pq_compressed_dense_side_plan_shape(spark, sf_dir):
 def test_hybrid_rrf_batch_ivfpq_pruned_and_compressed_dense_side(
     spark, sf_dir
 ):
-    # The IVFADC variant composes BOTH prior dense-side contracts: >= 3
-    # distinct range-partitioned grouped ranks, documents scanned
-    # exactly twice, candidates CELL-PRUNED (equi-join on `cell`
-    # against the broadcast probe relation) AND code-compressed (the
-    # ADC LUT reaches the codes via a (q_id, s, cid) equi-join, never
-    # the raw vectors), and nothing plans a cartesian.
+    # The IVFADC variant composes BOTH prior dense-side contracts on
+    # top of the batch plan's: candidates CELL-PRUNED (equi-join on
+    # `cell` against the broadcast probe relation) AND code-compressed
+    # (the ADC LUT reaches the codes via a (q_id, s, cid) equi-join,
+    # never the raw vectors), and nothing plans a cartesian.
     import re
 
     plan = _formatted(spark, "search_hybrid_rrf_batch_ivfpq", sf_dir)
-    range_parts = re.findall(r"rangepartitioning\(q_id\S*", plan)
-    assert len(set(range_parts)) >= 3, set(range_parts)
-    doc_scan_ids = set()
-    for m in re.finditer(
-        r"\((\d+)\) Scan parquet[^\n]*\n(?:[^\n]*\n){1,6}", plan
-    ):
-        if "documents" in m.group(0):
-            doc_scan_ids.add(m.group(1))
-    assert len(doc_scan_ids) == 2, doc_scan_ids
+    _assert_batched_hybrid_shape(plan)
     assert "CartesianProduct" not in plan
-    # round-13: the refine-shortlist lineage is truncated (see
-    # similarity.ivfpq_topk truncate_shortlist), so the pruned +
-    # compressed internals live behind a LogicalRDD boundary — the
-    # boundary must be present in the final plan...
-    assert "ExistingRDD" in plan, "shortlist truncation boundary missing"
-    # ...and the cell-pruning + compressed-scoring contracts are pinned
+    # the pruned + compressed internals live behind the shortlist's
+    # LogicalRDD boundary in the final plan...
+    _assert_shortlist_boundary(plan)
+    # ...so the cell-pruning + compressed-scoring contracts are pinned
     # on the dense side's own (untruncated) plan: candidates reach the
     # scorer through the broadcast cell equi-join, the per-query LUT
     # map through a broadcast q_id equi-join, and the residual ADC is
@@ -1250,23 +1236,29 @@ def test_hybrid_rrf_batch_ivfpq_pruned_and_compressed_dense_side(
 
 
 def test_hybrid_rrf_alpha_col_plan_shape(spark, sf_dir):
-    # Alpha-as-data must add ZERO scan shape vs the exact batch plan:
-    # >= 3 distinct range-partitioned grouped ranks, documents scanned
-    # exactly twice, the weight relation enters as a BROADCAST
-    # query-dimension join, and nothing plans a cartesian over data.
-    import re
-
+    # Alpha-as-data must add ZERO scan shape vs the exact batch plan,
+    # the weight relation enters as a BROADCAST query-dimension join.
     plan = _formatted(spark, "search_hybrid_rrf_alpha_col", sf_dir)
-    range_parts = re.findall(r"rangepartitioning\(q_id\S*", plan)
-    assert len(set(range_parts)) >= 3, set(range_parts)
-    doc_scan_ids = set()
-    for m in re.finditer(
-        r"\((\d+)\) Scan parquet[^\n]*\n(?:[^\n]*\n){1,6}", plan
-    ):
-        if "documents" in m.group(0):
-            doc_scan_ids.add(m.group(1))
-    assert len(doc_scan_ids) == 2, doc_scan_ids
+    _assert_batched_hybrid_shape(plan)
     assert "BroadcastHashJoin" in plan
+
+
+def test_hybrid_rrf_batch_leaves_pinned_persists(spark, sf_dir):
+    # A build + collect of the exact batched hybrid leaves 4
+    # MEMORY_AND_DISK persists behind: the BM25 postings and the
+    # lexical, dense and fused grouped_row_numbers ranks (see their
+    # docstrings). Pinned so a refactor that leaks one more fails here.
+    # RDDs persisted by earlier tests may be cleaned up meanwhile, so
+    # the build's own persists are counted by id, not by the total.
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    spark.catalog.clearCache()
+    before = persisted_ids()
+    all_plans()["search_hybrid_rrf_batch"].fn(spark, sf_dir).collect()
+    left = persisted_ids() - before
+    spark.catalog.clearCache()
+    assert len(left) == 4, left
 
 
 # --- Array lambdas: no row-invariant work per element ------------------
